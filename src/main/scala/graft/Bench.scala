@@ -88,15 +88,7 @@ object Bench {
     if (outFile != requestedOut)
       System.err.println(s"[bench] focused run: writing to $outFile " +
         s"(refusing to overwrite the fuller $requestedOut)")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(cpus.toInt)
     // one-time session warmup (parquet footers, codegen, shuffle + broadcast
     // + window infra) outside the per-query timers, so the first query isn't
     // charged for engine initialization

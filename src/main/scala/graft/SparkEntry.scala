@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core._
 import graft.ops.{Bpe, Classifier, Curation, Dedup, Dsir, LangModel, Multimodal, Relational, Retrieval, Sampling, Similarity, TextOps, Url}
-import graft.sources.Writer
+import graft.sources.{Loader, Writer}
 import graft.streaming.StreamingOps
 import graft.transformers._
 
@@ -31,73 +31,23 @@ import graft.transformers._
   */
 object SparkEntry {
 
-  /** Scan metadata cached per (table path, session cores): planned scan
-    * partition count + estimated scanned bytes (file-source stats = total
-    * file size). Round 15's floor forced physical planning of the bare
-    * scan (`toRdd`) on EVERY table read — dozens per query build; caching
-    * it makes the floor decision one map lookup per read after the first
-    * (the files never change inside a run). */
-  private val scanMeta =
-    scala.collection.concurrent.TrieMap.empty[String, (Int, Long)]
-  private def scanInfo(s: SparkSession, path: String): (Int, Long) =
-    scanMeta.getOrElseUpdate(s"$path@${s.sparkContext.defaultParallelism}", {
-      val df = s.read.parquet(path)
-      val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-      (df.queryExecution.toRdd.getNumPartitions,
-        bytes.min(BigInt(Long.MaxValue)).toLong)
-    })
-
-  /** Scan-parallelism floor, COST-AWARE (round 16; optimization guide
-    * §2.1/§2.5): repartition a just-read table only when BOTH hold —
-    *  (a) the planned scan has fewer partitions than the session's
-    *      default parallelism (single-file / single-row-group inputs:
-    *      physically unsplittable, every downstream per-row kernel runs
-    *      in ONE task however many cores the session has), AND
-    *  (b) the scanned bytes justify the extra Exchange: the floor target
-    *      is `min(cores, ceil(bytes / bytesPerTask))`, so a table smaller
-    *      than `bytesPerTask` NEVER shuffles — round 15 floored every
-    *      read to `defaultParallelism` unconditionally and the driver
-    *      measured 16 light queries regressing 0.45–0.89× from 32-way
-    *      shuffles of dictionary-sized tables (pure per-task scheduling
-    *      overhead; the whole suite ran 24% faster on 8 cores than 32).
-    * At production scale (many files / row groups ≥ cores) condition (a)
-    * is false and NO shuffle is added — the floor derives from input
-    * layout + bytes + session cores, never a local constant. Catalyst
-    * pushes filters and projections below Repartition, so query-side
-    * predicates still reach the parquet scan under the floor. */
-  private def flooredRead(
-      s: SparkSession, path: String, bytesPerTask: Long): DataFrame = {
-    val df = s.read.parquet(path)
-    val (parts, bytes) = scanInfo(s, path)
-    val target = math.min(
-      s.sparkContext.defaultParallelism.toLong,
-      math.max(1L, (bytes + bytesPerTask - 1) / bytesPerTask)).toInt
-    if (parts < target) df.repartition(target) else df
-  }
-
-  private def confBytes(s: SparkSession, key: String, default: Long): Long =
-    s.conf.getOption(key).map(_.toLong).getOrElse(default)
-
-  /** Default driver-table read: COLUMNAR-work floor — tasks of ~4 MB of
-    * scanned bytes (conf `graft.scan.floorBytesPerTask`), the guide-§2.1
-    * "partitions in the 100 MB—1 GB raw / few-MB compressed" sizing for
-    * plain filter/join/aggregate work. Every testdata table is below
-    * 11 MB, so at bench scale this reader adds NO Exchange (the round-14
-    * plan shape the driver measured as fastest for the dedup/sim/sel/
-    * relational families); a production-scale single unsplittable file
-    * still fans out to ~bytes/4MB tasks up to the core count. */
+  /** Default driver-table read: COLUMNAR-work floor
+    * ([[Loader.ColumnarBytesPerTask]], see [[Loader.flooredScan]]). Every
+    * testdata table is below 11 MB, so at bench scale this reader adds NO
+    * Exchange (the round-14 plan shape the driver measured as fastest for
+    * the dedup/sim/sel/relational families); a production-scale single
+    * unsplittable file still fans out to ~bytes/4MB tasks up to the core
+    * count. */
   private def rt(s: SparkSession, dir: String, name: String): DataFrame =
-    flooredRead(s, dir + "/" + name + ".parquet",
-      confBytes(s, "graft.scan.floorBytesPerTask", 4L << 20))
+    Loader.flooredScan(s, "parquet", dir + "/" + name + ".parquet",
+      Loader.ColumnarBytesPerTask)
 
   /** KERNEL-path table read: floor sized for per-row TEXT KERNELS
     * (tokenize, shingle-to-BPE merge chains, Viterbi, char-bigram
-    * explode, per-query scoring) whose per-row cost is ~10³× a columnar
-    * filter — tasks of ~16 KB of scanned bytes (conf
-    * `graft.kernelScan.floorBytesPerTask`; ≈100–400 documents ≈
-    * 40–400 ms of kernel work per task). Round 15 measured the win
-    * directly: flooring these reads to the core count took
-    * text_bm25_prf 11.0→3.7 s, text_langid_model 7.6→2.6 s,
+    * explode, per-query scoring) — [[Loader.KernelBytesPerTask]] ≈
+    * 100–400 documents ≈ 40–400 ms of kernel work per task. Round 15
+    * measured the win directly: flooring these reads to the core count
+    * took text_bm25_prf 11.0→3.7 s, text_langid_model 7.6→2.6 s,
     * text_embed_topk 6.3→2.4 s (driver bench, sf0.1, local[32]) — and
     * round 16's floor-off experiment confirmed the same queries regress
     * 1.5–10× without it while the NON-kernel families run faster
@@ -105,8 +55,8 @@ object SparkEntry {
     * blanket rule. Only call sites whose dominant cost is a per-row
     * kernel over the scanned rows use it. */
   private def rtKernel(s: SparkSession, dir: String, name: String): DataFrame =
-    flooredRead(s, dir + "/" + name + ".parquet",
-      confBytes(s, "graft.kernelScan.floorBytesPerTask", 16L << 10))
+    Loader.flooredScan(s, "parquet", dir + "/" + name + ".parquet",
+      Loader.KernelBytesPerTask)
 
   /** One contamination-index save dir per JVM for the model round-trip
     * query: created once, reused (overwrite) across invocations so bench
@@ -2245,7 +2195,7 @@ object SparkEntry {
     // equivalent; the pair logic is what the oracle can and does verify).
     "dedup_simhash_sig" -> ((s, dir) => {
       val docs = docsWithDups(s, dir)
-      docs.select(col("doc_id").as("id"), Dedup.simhashFor(docs, col("text")).as("sh"))
+      docs.select(col("doc_id").as("id"), Dedup.graftSimhash(col("text")).as("sh"))
     }),
     "dedup_ngram_jaccard" -> ((s, dir) =>
       Dedup.ngramJaccardPairs(docsWithDups(s, dir), "doc_id", "text")),
@@ -3675,7 +3625,7 @@ object SparkEntry {
       val vmap = typedLit(vocab.toMap)
       rtKernel(s, dir, "documents")
         .select(col("doc_id"), col("text"))
-        .withColumn("__t", Bpe.bpeTokens(s, col("text"), model,
+        .withColumn("__t", Bpe.bpeTokens(col("text"), model,
           pretok = Some(Bpe.Gpt2PretokPattern), byteLevel = true))
         .select(col("doc_id"),
           size(col("__t")).as("n_bpe"),
@@ -3720,7 +3670,7 @@ object SparkEntry {
       val vmap = typedLit(vocab.toMap)
       rtKernel(s, dir, "documents")
         .select(col("doc_id"), col("text"))
-        .withColumn("__t", Bpe.bpeTokens(s, col("text"), model,
+        .withColumn("__t", Bpe.bpeTokens(col("text"), model,
           pretok = Some(Bpe.Gpt2PretokPattern), byteLevel = true))
         .select(col("doc_id"),
           size(col("__t")).as("n_bpe"),
@@ -3751,7 +3701,7 @@ object SparkEntry {
       rtKernel(s, dir, "documents")
         .select(col("doc_id"), col("text"))
         .withColumn("__t",
-          Bpe.bpeTokens(s, Bpe.spPretokEncode(col("text")), model))
+          Bpe.bpeTokens(Bpe.spPretokEncode(col("text")), model))
         .select(col("doc_id"),
           size(col("__t")).as("n_bpe"),
           array_join(col("__t"), Bpe.Sep).as("bpe_joined"),
@@ -3769,7 +3719,7 @@ object SparkEntry {
       rtKernel(s, dir, "documents")
         .select(col("doc_id"), col("text"))
         .withColumn("__t",
-          Bpe.bpeTokens(s, Bpe.spPretokEncode(col("text")), model))
+          Bpe.bpeTokens(Bpe.spPretokEncode(col("text")), model))
         .withColumn("__ids", Bpe.spByteFallbackIds(col("__t"), pieces))
         .select(col("doc_id"),
           size(col("__ids")).as("n_ids"),
@@ -3810,7 +3760,7 @@ object SparkEntry {
       rtKernel(s, dir, "documents")
         .select(col("doc_id"), col("text"))
         .withColumn("__t",
-          Bpe.unigramTokens(s,
+          Bpe.unigramTokens(
             Bpe.spPretokEncode(substring(col("text"), 1, SpUnigramCap)),
             pieces))
         .withColumn("__ids", Bpe.spByteFallbackIds(col("__t"), pieces))

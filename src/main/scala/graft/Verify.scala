@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -7,19 +7,7 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // Kept for older testdata drops whose events.parquet stored
-      // TIMESTAMP(NANOS): those load as epoch-nanos longs and
-      // SparkEntry.rtEvents converts explicitly. A no-op for current
-      // TIMESTAMP(MICROS) drops.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(cpus.toInt)
     new java.io.File(outDir).mkdirs()
     // Optional name filter for focused local runs (same contract as Bench).
     val only = sys.env.get("SPARK_GRAFT_QUERIES").map(_.split(",").map(_.trim).toSet)

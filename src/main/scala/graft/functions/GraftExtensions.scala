@@ -6,9 +6,14 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** SparkSessionExtensions installer for graft's native Catalyst expressions
   * (the sanctioned extension route — set
-  * `spark.sql.extensions=graft.functions.GraftExtensions` on the session).
-  * graft.ops.Dedup detects the functions via the catalog and falls back to
-  * the equivalent pure-DataFrame formulation when absent. */
+  * `spark.sql.extensions=graft.functions.GraftExtensions` on the session;
+  * [[graft.Session.local]] does).
+  *
+  * REQUIRED: every graft operator calls these functions unconditionally —
+  * there is no fallback formulation on a vanilla session. Spark analyzes a
+  * DataFrame as it is built, so an op run without the extension fails at
+  * construction with an unresolved-routine error naming the `graft_*`
+  * function. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   private def fn(

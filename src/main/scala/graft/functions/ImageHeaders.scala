@@ -1064,9 +1064,7 @@ case class ExifGpsStrip(child: Expression) extends Expression {
   *    canvas width−1 / height−1.
   *
   * NULL for non-WebP bytes, truncated chunk bodies, or a walk that finds
-  * no codec chunk. EXTENSION-REQUIRED (no pure-Column twin):
-  * [[graft.ops.Multimodal.imageDims]] emits NULL for WebP payloads when
-  * GraftExtensions is not installed, stated in its scaladoc. */
+  * no codec chunk. No pure-Column twin. */
 case class WebpDims(child: Expression) extends Expression {
 
   override def children: Seq[Expression] = Seq(child)
@@ -1164,7 +1162,7 @@ case class WebpDims(child: Expression) extends Expression {
   * children and ≤ 256 `ipma` entries scanned. NULL for non-ftyp bytes;
   * the caller gates on the major brand (this kernel reads ANY ISO-BMFF
   * — brand policy is format sniffing, not box grammar).
-  * EXTENSION-REQUIRED (no pure-Column twin), like [[WebpDims]]. */
+  * No pure-Column twin, like [[WebpDims]]. */
 case class IsoBmffDims(child: Expression) extends Expression {
 
   override def children: Seq[Expression] = Seq(child)

@@ -516,9 +516,8 @@ case class RepetitionStats(child: Expression) extends Expression {
   * combining marks (decompose → drop Mn category → recompose to the target
   * form) — the canonicalization pass that must run BEFORE any hashing,
   * fingerprinting, or dedup so that visually-identical byte sequences
-  * (é precomposed vs e + U+0301) collide. No pure-Column fallback exists
-  * (Spark has no normalization builtin); TextOps.normalizeText raises a
-  * clear error when the extension is not installed. */
+  * (é precomposed vs e + U+0301) collide. No pure-Column twin exists
+  * (Spark has no normalization builtin). */
 case class NormalizeText(child: Expression, form: Expression, stripAccents: Expression)
     extends Expression {
 

@@ -13,9 +13,8 @@ import org.apache.spark.sql.types._
   * interpreted expression tree per candidate pair; these expressions run one
   * `eval` per TILE with tight loops over primitive arrays — same results,
   * roughly an order of magnitude less per-pair overhead. Registered through
-  * [[GraftExtensions]] (SparkSessionExtensions); graft.ops.Dedup falls back
-  * to the pure-DataFrame formulation when they are not installed, so the
-  * library works on vanilla sessions.
+  * [[GraftExtensions]] (SparkSessionExtensions), which every session that
+  * runs graft's operators must install.
   */
 object TilePairs {
   val JaccardName = "graft_jaccard_tile_pairs"

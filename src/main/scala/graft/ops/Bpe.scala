@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Byte-pair-encoding subword tokenization (extension beyond the reference
@@ -22,11 +22,9 @@ import org.apache.spark.sql.functions._
   * string REPLACE, so any SQL engine replays tokenization with nested
   * REPLACE calls (the DuckDB oracle does exactly that).
   *
-  * Scale shape: tokenization is a per-row narrow projection (native kernel
-  * when [[graft.functions.GraftExtensions]] is installed — one primitive
-  * loop per row, whole-stage codegen; else a REPLACE-chain fallback, capped
-  * at [[MaxFallbackMerges]] merges to keep the expression tree sane). The
-  * merge table travels as a plan literal like graft_ivf_cell's centroids —
+  * Scale shape: tokenization is a per-row narrow projection (the native
+  * graft_bpe_encode kernel — one primitive loop per row, whole-stage
+  * codegen). The merge table travels as a plan literal like graft_ivf_cell's centroids —
   * fine for the ≤ 64k-entry tables real tokenizers use (a few hundred KB,
   * shipped once per executor with the task closure). Fitting samples the
   * corpus (like IVF's capped-Lloyd) and runs one small aggregation job per
@@ -39,11 +37,6 @@ object Bpe {
     * token character). */
   val Sep = "\u001f"
   private val Sep2 = Sep + Sep
-
-  /** Largest merge table the pure-Column REPLACE-chain fallback accepts —
-    * beyond this the expression tree (and its codegen) stops being a
-    * reasonable plan; install GraftExtensions for the native kernel. */
-  val MaxFallbackMerges = 512
 
   /** GPT-2-style regex pre-tokenizer (contractions, space-prefixed letter
     * runs, space-prefixed digit runs, space-prefixed punctuation runs,
@@ -598,21 +591,16 @@ object Bpe {
     * point's surface is not in the piece vocab, so it falls back to
     * its UTF-8 bytes — exactly SentencePiece's byte_fallback).
     *
-    * Native kernel when [[graft.functions.GraftExtensions]] is
-    * installed (one trie-walk DP per row, whole-stage codegen); else a
-    * pure-Column `aggregate` DP ([[unigramTokensFallback]]) —
-    * bit-identical (OpsSpec pins parity), but O(n²) in text length
-    * from accumulator-array copies, so install the extensions for
-    * production corpora. Scores widen float32 → float64 exactly; the
+    * Native kernel (one trie-walk DP per row, whole-stage codegen);
+    * [[unigramTokensFallback]] is its bit-identical pure-Column
+    * reference (OpsSpec pins parity). Scores widen float32 → float64 exactly; the
     * DP sums in float64 (more tie-resistant than SentencePiece's own
     * float32 lattice — a documented, strictly-more-precise
     * divergence). */
-  def unigramTokens(spark: SparkSession, text: Column, pieces: Seq[SpPiece]): Column = {
+  def unigramTokens(text: Column, pieces: Seq[SpPiece]): Column = {
     val (surf, sc) = unigramTable(pieces)
-    if (spark.catalog.functionExists(graft.functions.TilePairs.SpUnigramName))
-      call_function(graft.functions.TilePairs.SpUnigramName, text,
-        typedLit(surf), typedLit(sc))
-    else unigramTokensFallback(text, surf, sc)
+    call_function(graft.functions.TilePairs.SpUnigramName, text,
+      typedLit(surf), typedLit(sc))
   }
 
   /** The pure-Column Viterbi: dp as an `aggregate` over code-point
@@ -621,7 +609,8 @@ object Bpe {
     * = lexicographic (score, length) — exactly the tie rule), then a
     * reverse `aggregate` backtrack. The dp array is bound once via a
     * single-element `transform` so the backtrack does not re-evaluate
-    * it per step. Bit-identical to the kernel. */
+    * it per step. Bit-identical to the kernel, but O(n²) in text length
+    * from accumulator-array copies — a test reference only. */
   private[graft] def unigramTokensFallback(
       text: Column, surfaces: Seq[String], scores: Seq[Double]): Column = {
     val maxLen = surfaces.map(s => s.codePointCount(0, s.length)).max
@@ -683,7 +672,7 @@ object Bpe {
     graft.core.Validators.requireColumns(df, Seq(textCol))
     graft.core.Validators.requireColumnsAbsent(df, Seq(outCol), "tokenizeUnigram")
     df.withColumn(outCol,
-      unigramTokens(df.sparkSession, preEncode(col(textCol)), pieces))
+      unigramTokens(preEncode(col(textCol)), pieces))
   }
 
   /** Appends `outCol` = the UNIGRAM token COUNT of `textCol` — the
@@ -700,7 +689,7 @@ object Bpe {
     graft.core.Validators.requireColumns(df, Seq(textCol))
     graft.core.Validators.requireColumnsAbsent(df, Seq(outCol), "unigramTokenCount")
     df.withColumn(outCol,
-      size(unigramTokens(df.sparkSession, preEncode(col(textCol)), pieces)))
+      size(unigramTokens(preEncode(col(textCol)), pieces)))
   }
 
   /** [[compressionStats]] under a UNIGRAM tokenizer: per `groupCols`
@@ -723,7 +712,7 @@ object Bpe {
       "unigramStats")
     df
       .withColumn("__graft_nu",
-        size(unigramTokens(df.sparkSession, preEncode(col(textCol)), pieces)))
+        size(unigramTokens(preEncode(col(textCol)), pieces)))
       .groupBy(groupCols.map(col): _*)
       .agg(
         count(lit(1)).as("n_docs"),
@@ -734,15 +723,13 @@ object Bpe {
           col("n_chars").cast("double") / col("n_sp").cast("double")))
   }
 
-  /** BPE token array of `text` under `model` — native kernel when available,
-    * else the REPLACE-chain fallback (≤ [[MaxFallbackMerges]] merges).
+  /** BPE token array of `text` under `model` through the native kernel.
     * `pretok = Some(pattern)` switches to regex-pre-tokenized mode
     * ([[Gpt2PretokPattern]] is the standard choice): pre-tokens tokenize
-    * INDEPENDENTLY and their token lists concatenate — on the kernel path
-    * one kernel call per pre-token inside a `transform` + `flatten` (still
-    * one narrow projection), on the fallback path the REPLACE chain over
-    * [[encode0Pretok]]'s boundary encoding. A model must be APPLIED in the
-    * same mode it was fit in ([[bpeFit]]'s `pretok`).
+    * INDEPENDENTLY and their token lists concatenate — one kernel call per
+    * pre-token inside a `transform` + `flatten` (still one narrow
+    * projection). A model must be APPLIED in the same mode it was fit in
+    * ([[bpeFit]]'s `pretok`).
     *
     * `byteLevel = true` is the external-tokenizer mode ([[loadGpt2Merges]]
     * tables): each pre-token (or, without `pretok`, the whole text) is
@@ -752,16 +739,13 @@ object Bpe {
     * (the GPT-2 order — the regex classes would misread 'Ġ' as a
     * letter). */
   def bpeTokens(
-      spark: SparkSession,
       text: Column,
       model: BpeModel,
       pretok: Option[String] = None,
       byteLevel: Boolean = false): Column = {
-    // kernel path: the byte mapping runs INSIDE the primitive loop (third
-    // kernel argument) — the Column-side gpt2ByteEncode (hex + regex +
-    // HOF per pre-token) is the fallback-only route, bit-parity-tested
-    val prep: Column => Column =
-      if (byteLevel) gpt2ByteEncode else identity
+    // the byte mapping runs INSIDE the primitive loop (third kernel
+    // argument) — the Column-side gpt2ByteEncode (hex + regex + HOF per
+    // pre-token) is the reference route, bit-parity-tested
     def kernel(t: Column): Column =
       if (byteLevel)
         call_function(graft.functions.TilePairs.BpeName, t,
@@ -770,28 +754,19 @@ object Bpe {
         call_function(graft.functions.TilePairs.BpeName, t,
           typedLit(model.flat))
     pretok match {
-      case None =>
-        if (spark.catalog.functionExists(graft.functions.TilePairs.BpeName))
-          kernel(text)
-        else bpeTokensFallback(prep(text), model)
+      case None => kernel(text)
       case Some(pattern) =>
         val cleaned = regexp_replace(coalesce(text, lit("")), Sep, "")
         val pts = regexp_extract_all(cleaned, lit(pattern), lit(0))
-        if (spark.catalog.functionExists(graft.functions.TilePairs.BpeName))
-          flatten(transform(pts, t => kernel(t)))
-        else
-          flatten(transform(pts, t => bpeTokensFallback(prep(t), model)))
+        flatten(transform(pts, t => kernel(t)))
     }
   }
 
   /** The pure-Column tokenizer: one codegen'd REPLACE per merge over the
-    * separator encoding. Bit-identical to the kernel (OpsSpec pins it). */
+    * separator encoding — the kernel's bit-identical reference (OpsSpec
+    * and PropertySpec pin it). The expression tree grows with the merge
+    * table, so it is for small test models only. */
   private[graft] def bpeTokensFallback(text: Column, model: BpeModel): Column = {
-    if (model.merges.size > MaxFallbackMerges)
-      throw graft.errors.FeatureFactoryException.InvalidParameter(
-        s"bpeTokens: ${model.merges.size} merges exceeds the pure-Column " +
-          s"fallback cap ($MaxFallbackMerges); install GraftExtensions " +
-          "(spark.sql.extensions=graft.functions.GraftExtensions)")
     val enc = model.merges.foldLeft(encode0(text)) { case (e, (a, b)) =>
       mergeStep(e, a, b)
     }
@@ -810,7 +785,7 @@ object Bpe {
     graft.core.Validators.requireColumns(df, Seq(textCol))
     graft.core.Validators.requireColumnsAbsent(df, Seq(outCol), "tokenizeBpe")
     df.withColumn(outCol,
-      bpeTokens(df.sparkSession, col(textCol), model, pretok, byteLevel))
+      bpeTokens(col(textCol), model, pretok, byteLevel))
   }
 
   /** Appends `outCol` = the BPE token COUNT of `textCol` — the drop-in
@@ -825,7 +800,7 @@ object Bpe {
     graft.core.Validators.requireColumns(df, Seq(textCol))
     graft.core.Validators.requireColumnsAbsent(df, Seq(outCol), "bpeTokenCount")
     df.withColumn(outCol,
-      size(bpeTokens(df.sparkSession, col(textCol), model, pretok, byteLevel)))
+      size(bpeTokens(col(textCol), model, pretok, byteLevel)))
   }
 
   /** Deterministic integer-id vocabulary of a merge table: ids 0..k−1 are
@@ -887,7 +862,7 @@ object Bpe {
       "encodeIds: vocab tokens must be distinct")
     val m = typedLit(vocab.toMap)
     df.withColumn(outCol,
-      transform(bpeTokens(df.sparkSession, col(textCol), model),
+      transform(bpeTokens(col(textCol), model),
         t => coalesce(element_at(m, t), lit(-1))))
   }
 
@@ -927,7 +902,7 @@ object Bpe {
         regexp_extract_all(hex(encode(t, "UTF-8")), lit("[0-9A-F]{2}"), lit(0)),
         p => conv(p, 16, 10).cast("int"))
     df.withColumn(outCol,
-      flatten(transform(bpeTokens(df.sparkSession, col(textCol), model, pretok),
+      flatten(transform(bpeTokens(col(textCol), model, pretok),
         t =>
           when(element_at(m, t).isNotNull,
             array(element_at(m, t) + lit(256)))
@@ -990,7 +965,7 @@ object Bpe {
       "compressionStats")
     df
       .withColumn("__graft_nb",
-        size(bpeTokens(df.sparkSession, preEncode(col(textCol)), model,
+        size(bpeTokens(preEncode(col(textCol)), model,
           pretok, byteLevel)))
       .groupBy(groupCols.map(col): _*)
       .agg(

@@ -22,8 +22,8 @@ object Curation {
     * optional MinHash near-dup removal (keep one representative per
     * cluster) → optional deterministic id-hash sample.
     *
-    * Input schema is preserved. Defaults: `normalize = false` (requires
-    * GraftExtensions when on), `redactPii = false` (on: scrub emails/
+    * Input schema is preserved. Defaults: `normalize = false`,
+    * `redactPii = false` (on: scrub emails/
     * phones/IPs right after normalization, BEFORE any fingerprinting so
     * redacted twins collapse), `lineDedupMaxDocFreq = 0` (off; > 0 removes
     * lines appearing in more than that many docs BEFORE fingerprinting, so

@@ -9,9 +9,10 @@ import org.apache.spark.sql.functions._
   * Extension beyond the reference surface (SURVEY §2.11): the reference has
   * no dedup of any kind. Everything here is built from Catalyst expressions
   * (higher-order array functions + xxhash64, plus the native tile-pair
-  * expressions of graft.functions when GraftExtensions is installed) — no
-  * UDFs, and no driver-side data state, so each operator is a fixed number
-  * of shuffles regardless of data size.
+  * expressions of graft.functions, which [[graft.functions.GraftExtensions]]
+  * must register on the session) — no UDFs, and no driver-side data
+  * state, so each operator is a fixed number of shuffles regardless of
+  * data size.
   *
   * Scale design rules shared by every operator below:
   *  - expensive per-row expressions (shingling, signatures) are computed in
@@ -34,11 +35,6 @@ object Dedup {
     * the bucket shuffle, same payload class as a minhash signature. */
   var MaxBitmapVocab: Int = 4096
 
-  /** Test hook: force the pure-Column fallback formulations even when the
-    * native kernels are registered on the session (lets one session
-    * cross-check both variants). */
-  var ForceFallback: Boolean = false
-
   /** Exact dedup: one surviving row per distinct value of `keyCols`, keeping
     * the row with the smallest `tieBreak` (deterministic, unlike
     * `dropDuplicates`, which keeps an arbitrary row per key).
@@ -54,8 +50,9 @@ object Dedup {
   }
 
   /** Distinct character shingles (n-grams) of `text`, empty when the text is
-    * shorter than `shingleSize`. Pure expression (sequence + substr). */
-  def shingles(text: Column, shingleSize: Int): Column = {
+    * shorter than `shingleSize`. Pure expression (sequence + substr); the
+    * reference for the graft_shingle_strings kernel (FunctionsSpec). */
+  private[graft] def shingles(text: Column, shingleSize: Int): Column = {
     val n = length(text) - shingleSize + 1
     when(
       n >= 1,
@@ -67,59 +64,31 @@ object Dedup {
   /** Each distinct shingle hashed once to a long — the single place where
     * string hashing happens; every downstream hash/compare is long-typed.
     * (Jaccard over hashed shingles equals Jaccard over the string sets
-    * unless xxhash64 collides within one corpus vocabulary — negligible.) */
-  def shingleHashes(text: Column, shingleSize: Int): Column =
+    * unless xxhash64 collides within one corpus vocabulary — negligible.)
+    * Pure-Column reference for the graft_shingle_hashes kernel (FunctionsSpec
+    * pins bit-parity); the operators below call the kernel. */
+  private[graft] def shingleHashes(text: Column, shingleSize: Int): Column =
     transform(shingles(text, shingleSize), s => xxhash64(s))
 
   // ───────────────────────── shared internals ─────────────────────────
 
-  private def nativeFnsAvailable(df: DataFrame): Boolean =
-    !ForceFallback &&
-      df.sparkSession.catalog.functionExists(graft.functions.TilePairs.ShingleName)
-
   /** [[shingleHashes]] through the native kernel (bit-identical, ~10× less
-    * per-row overhead) when GraftExtensions is installed on the session. */
-  private def shingleHashesFor(df: DataFrame, text: Column, shingleSize: Int): Column =
-    if (nativeFnsAvailable(df))
-      call_function(graft.functions.TilePairs.ShingleName, text, lit(shingleSize))
-    else shingleHashes(text, shingleSize)
+    * per-row overhead). */
+  private def graftShingleHashes(text: Column, shingleSize: Int): Column =
+    call_function(graft.functions.TilePairs.ShingleName, text, lit(shingleSize))
+
+  /** Minhash signature of a shingle-hash array through the native kernel. */
+  private def graftMinhashSig(gs: Column, numHashes: Int): Column =
+    call_function(graft.functions.TilePairs.MinhashName, gs, lit(numHashes))
 
   /** (id, h) rows: one row per distinct shingle hash per doc. Docs shorter
     * than the shingle size vanish here (no shingles → no candidates). */
   private def explodedHashes(df: DataFrame, idCol: String, textCol: String, n: Int) =
     df.select(col(idCol).as("id"),
-      explode(shingleHashesFor(df, col(textCol), n)).as("h"))
+      explode(graftShingleHashes(col(textCol), n)).as("h"))
 
   /** Side length of a pair-expansion tile (members per side). */
   private val BlockSize = 512
-
-  /** All (x ∈ left, y ∈ right) pairs satisfying `keep` — left members all
-    * precede right members in the bucket's sort order, so pair order holds. */
-  private def crossPairs(
-      l: Column, r: Column,
-      keep: (Column, Column) => Column,
-      emit: (Column, Column) => Column): Column =
-    flatten(transform(l, x => transform(filter(r, y => keep(x, y)), y => emit(x, y))))
-
-  /** Jaccard length filter: J(A,B) ≤ min(|A|,|B|)/max(|A|,|B|), so a pair
-    * can only reach `threshold` if the smaller set is at least threshold ×
-    * the larger. Two comparisons — used to short-circuit the bitmap fold. */
-  private def lengthCompatible(x: Column, y: Column, threshold: Double): Column =
-    least(x("sz"), y("sz")).cast("double") >=
-      greatest(x("sz"), y("sz")).cast("double") * threshold
-
-  /** Expand a bucket array `xs` (sorted array<struct>, first field the id)
-    * into the pairs (x, y), x before y, that satisfy `keep` — evaluated as
-    * ONE expression per bucket row, so non-matching pairs are filtered
-    * during evaluation and never materialized into the output array. */
-  private def expandBucket(
-      xs: Column,
-      keep: (Column, Column) => Column,
-      emit: (Column, Column) => Column): Column =
-    flatten(transform(xs, (x, i) =>
-      transform(
-        filter(slice(xs, i + lit(2), size(xs)), y => keep(x, y)),
-        y => emit(x, y))))
 
   /** Blocked, cluster-spread bucket expansion. A bucket's expansion cost is
     * quadratic in member count, so (a) AQE's byte-based partition coalescing
@@ -130,8 +99,7 @@ object Dedup {
     * repartition the TILES across 2× the configured parallelism (explicit
     * numPartitions so AQE cannot re-coalesce), then evaluate each tile —
     * diagonal tiles as ordered pairs, off-diagonal as full crosses. `buckets`
-    * must have the sorted member array in column `xs`; returns one column
-    * `p` per surviving pair. */
+    * must have the sorted member array in column `xs`. */
   private def tileBuckets(buckets: DataFrame, keys: Seq[Column]): DataFrame = {
     val g = ceil(size(col("xs")).cast("double") / BlockSize).cast("int")
     val blockPairs = flatten(transform(sequence(lit(0), g - 1), bi =>
@@ -148,16 +116,6 @@ object Dedup {
           slice(col("xs"), col("b.bj") * BlockSize + 1, lit(BlockSize)).as("r")): _*)
       .repartition(parts, keys ++ Seq(col("bi"), col("bj")): _*)
   }
-
-  private def expandBuckets(
-      buckets: DataFrame,
-      keys: Seq[Column],
-      keep: (Column, Column) => Column,
-      emit: (Column, Column) => Column): DataFrame =
-    tileBuckets(buckets, keys)
-      .select(explode(
-        when(col("bi") === col("bj"), expandBucket(col("l"), keep, emit))
-          .otherwise(crossPairs(col("l"), col("r"), keep, emit))).as("p"))
 
   /** Two-sided bucket tiling for ASYMMETRIC joins: buckets have separate
     * left (`lxs`) and right (`rxs`) member arrays; every (left block ×
@@ -183,37 +141,19 @@ object Dedup {
       .repartition(parts, keys ++ Seq(col("bi"), col("bj")): _*)
   }
 
-  /** Expand cross-side bucket pairs: native tile kernel when available
-    * (diagonal=false → full left×right cross), HOF crossPairs fallback. */
+  /** Expand cross-side bucket pairs through a native tile kernel
+    * (diagonal=false → full left×right cross). */
   private def expandCrossBuckets(
       buckets: DataFrame,
       keys: Seq[Column],
       fnName: String,
-      arg: Column,
-      keep: (Column, Column) => Column,
-      emit: (Column, Column) => Column): DataFrame = {
-    val tiles = tileBucketsCross(buckets, keys)
-    if (nativeTilePairsAvailable(buckets))
-      tiles.select(explode(call_function(
-        fnName, col("l"), col("r"), lit(false), arg)).as("p"))
-    else
-      tiles.select(explode(crossPairs(col("l"), col("r"), keep, emit)).as("p"))
-  }
-
-  /** Tile expansion through a native Catalyst expression (one tight eval
-    * per tile — see graft.functions.TilePairs) when [[GraftExtensions]] is
-    * installed on the session; callers fall back to [[expandBuckets]]'s
-    * higher-order-function formulation otherwise. */
-  private def expandBucketsNative(
-      buckets: DataFrame,
-      keys: Seq[Column],
-      fnName: String,
-      args: Column*): DataFrame =
-    tileBuckets(buckets, keys)
+      arg: Column): DataFrame =
+    tileBucketsCross(buckets, keys)
       .select(explode(call_function(
-        fnName, Seq(col("l"), col("r"), col("bi") === col("bj")) ++ args: _*)).as("p"))
+        fnName, col("l"), col("r"), lit(false), arg)).as("p"))
 
-  /** Symmetric bucket expansion with native/HOF dispatch — the
+  /** Symmetric bucket expansion through a native tile kernel (one tight
+    * eval per tile — see graft.functions.TilePairs) — the
     * [[minhashCandidates]] idiom packaged for sibling ops (Similarity's
     * embedding near-dup runs on the same tiling machinery). `buckets` must
     * carry the sorted member array in `xs`; returns one `p` struct column
@@ -222,13 +162,10 @@ object Dedup {
       buckets: DataFrame,
       keys: Seq[Column],
       fnName: String,
-      arg: Column,
-      keep: (Column, Column) => Column,
-      emit: (Column, Column) => Column): DataFrame =
-    if (nativeTilePairsAvailable(buckets))
-      expandBucketsNative(buckets, keys, fnName, arg)
-    else
-      expandBuckets(buckets, keys, keep, emit)
+      args: Column*): DataFrame =
+    tileBuckets(buckets, keys)
+      .select(explode(call_function(
+        fnName, Seq(col("l"), col("r"), col("bi") === col("bj")) ++ args: _*)).as("p"))
 
   /** Materialize an intermediate that later stages read several times.
     * Uses RELIABLE checkpointing (survives executor loss — the right choice
@@ -251,36 +188,6 @@ object Dedup {
       df.checkpoint(eager = false)
     else df.localCheckpoint(eager = false)
 
-  private def nativeTilePairsAvailable(df: DataFrame): Boolean =
-    !ForceFallback &&
-      df.sparkSession.catalog.functionExists(graft.functions.TilePairs.JaccardName)
-
-  /** Σ bit_count(a[i] & b[i]) — exact intersection size of two bitmap
-    * arrays (same global dictionary). */
-  private def bitmapCommon(a: Column, b: Column, words: Int): Column =
-    aggregate(
-      zip_with(a, b, (x, y) => bit_count(x.bitwiseAND(y)).cast("long")),
-      lit(0L),
-      (acc, v) => acc + v)
-
-  /** Exact Jaccard from bitmaps + set sizes: |A∩B| / (|A|+|B|−|A∩B|). */
-  private def bitmapJaccard(x: Column, y: Column, words: Int): Column = {
-    val common = bitmapCommon(x("bm"), y("bm"), words)
-    common.cast("double") / (x("sz") + y("sz") - common).cast("double")
-  }
-
-  /** OR-aggregate building a V-bit bitmap as `words` longs from a 0-based
-    * dictionary index column. Each (doc, shingle) row sets exactly one bit,
-    * and rows are distinct per doc, so SUM of the one-hot words is the OR. */
-  private def bitmapAggs(idx: Column, words: Int): Seq[Column] =
-    (0 until words).map { w =>
-      sum(
-        when(
-          (idx / 64).cast("int") === w,
-          call_function("shiftleft", lit(1L), (idx % 64).cast("int")))
-          .otherwise(lit(0L))).as(s"bm$w")
-    }
-
   /** ONE probe job deciding the verification strategy: collect the distinct
     * shingle hashes AND their document frequencies when there are at most
     * [[MaxBitmapVocab]] of them (partial agg + limit MaxBitmapVocab+1 — the
@@ -297,18 +204,13 @@ object Dedup {
     if (probe.length <= MaxBitmapVocab) Some(probe) else None
   }
 
-  private def smallVocab(hashed: DataFrame): Option[Array[Long]] =
-    smallVocabFreq(hashed).map(_.map(_._1).sorted)
-
   /** Driver-side dictionary over a small vocabulary: hashes sorted by value
     * (for binary search), each position's bit RANK in global rarity order
     * (freq asc, hash asc), and the per-rank frequency. Bit r of a bitmap =
     * "doc contains the r-th rarest shingle", so a prefix filter is just the
     * first k set bits. */
   private case class RarityDict(
-      vocabSorted: Array[Long], rankOf: Array[Int], freqByRank: Array[Long]) {
-    def words: Int = (vocabSorted.length + 63) / 64
-  }
+      vocabSorted: Array[Long], rankOf: Array[Int], freqByRank: Array[Long])
 
   private def rarityDict(entries: Array[(Long, Long)]): RarityDict = {
     val byRarity = entries.sortBy { case (h, n) => (n, h) }
@@ -318,6 +220,12 @@ object Dedup {
     RarityDict(vocabSorted, vocabSorted.map(rankIndex), byRarity.map(_._2))
   }
 
+  /** Dictionary bitmap of a shingle-hash array through the native kernel:
+    * bit r set ⇔ the doc contains the r-th rarest vocabulary shingle. */
+  private def graftBitmap(gs: Column, d: RarityDict): Column =
+    call_function(graft.functions.TilePairs.BitmapName, gs,
+      typedLit(d.vocabSorted.toSeq), typedLit(d.rankOf.toSeq))
+
   /** Per-doc (id, sz, bm) through the native kernels: one narrow projection,
     * no join, no shuffle. Docs with no shingles are dropped (as in the
     * exploded formulation, where they produce no rows). */
@@ -325,33 +233,13 @@ object Dedup {
       df: DataFrame, idCol: String, textCol: String, n: Int, d: RarityDict): DataFrame =
     df.select(
       col(idCol).as("id"),
-      shingleHashesFor(df, col(textCol), n).as("gs"))
+      graftShingleHashes(col(textCol), n).as("gs"))
       .filter(size(col("gs")) > 0)
       .select(
         col("id"),
         size(col("gs")).cast("int").as("sz"),
-        call_function(graft.functions.TilePairs.BitmapName, col("gs"),
-          typedLit(d.vocabSorted.toSeq), typedLit(d.rankOf.toSeq)).as("bm"),
+        graftBitmap(col("gs"), d).as("bm"),
         col("gs"))
-
-  /** Tiny (h → 0-based idx) dictionary DataFrame from the collected
-    * vocabulary — broadcast into the feature join. */
-  private def dictionaryDf(df: DataFrame, vocab: Array[Long]): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    vocab.zipWithIndex.toSeq.toDF("h", "idx")
-  }
-
-  /** (id, sz, bm): per-doc distinct-shingle count and dictionary bitmap,
-    * one join + one aggregate job. */
-  private def bitmapFeatures(hashed: DataFrame, dict: DataFrame, words: Int): DataFrame = {
-    val aggs = count(lit(1)).cast("int").as("sz") +: bitmapAggs(col("idx"), words)
-    hashed
-      .join(broadcast(dict), "h")
-      .groupBy(col("id"))
-      .agg(aggs.head, aggs.tail: _*)
-      .select(col("id"), col("sz"), array((0 until words).map(w => col(s"bm$w")): _*).as("bm"))
-  }
 
   /** Exact-duplicate groups: (text, sorted member ids). Near-dup pipelines
     * run on one REPRESENTATIVE per distinct text — on dup-heavy corpora
@@ -374,15 +262,22 @@ object Dedup {
     * Jaccard exactly 1.0 (skipped for texts too short to have shingles —
     * their Jaccard is undefined, matching the pipelines). Tiled like every
     * other quadratic expansion. */
-  private def withinGroupPairs(groups: DataFrame, n: Int): DataFrame =
-    expandBuckets(
+  private def withinGroupPairs(groups: DataFrame, n: Int): DataFrame = {
+    def pair(x: Column, y: Column) = struct(x.as("a"), y.as("b"))
+    val l = col("l")
+    // diagonal tiles: each member with every later member; off-diagonal
+    // tiles: the full left × right cross
+    val ordered = flatten(transform(l, (x, i) =>
+      transform(slice(l, i + lit(2), size(l)), y => pair(x, y))))
+    val crossed = flatten(transform(l, x => transform(col("r"), y => pair(x, y))))
+    tileBuckets(
       groups
         .filter(size(col("ids")) > 1 && length(col("text")) >= n)
         .select(xxhash64(col("text")).as("gk"), col("ids").as("xs")),
-      Seq(col("gk")),
-      (_, _) => lit(true),
-      (x, y) => struct(x.as("a"), y.as("b"), lit(1.0).as("j")))
-      .select(col("p.a").as("id_a"), col("p.b").as("id_b"), col("p.j").as("jaccard"))
+      Seq(col("gk")))
+      .select(explode(when(col("bi") === col("bj"), ordered).otherwise(crossed)).as("p"))
+      .select(col("p.a").as("id_a"), col("p.b").as("id_b"), lit(1.0).as("jaccard"))
+  }
 
   /** Expand representative pairs over their groups' members; pair order is
     * restored with least/greatest (members of different groups have no
@@ -426,7 +321,7 @@ object Dedup {
     // reach millions of rows at corpus scale — a forced broadcast would OOM
     // the driver. AQE picks broadcast when the set is actually small.
     val sets = df
-      .select(col(idCol).as("id"), shingleHashesFor(df, col(textCol), n).as("gs"))
+      .select(col(idCol).as("id"), graftShingleHashes(col(textCol), n).as("gs"))
       .join(needed, "id")
     val a = sets.select(col("id").as("id_a"), col("gs").as("gs_a"))
     val b = sets.select(col("id").as("id_b"), col("gs").as("gs_b"))
@@ -444,35 +339,13 @@ object Dedup {
 
   // ───────────────────────── MinHash LSH ─────────────────────────
 
-  /** (id, sig): all `numHashes` minhashes per doc. Native path: one narrow
-    * projection through graft_minhash_sig — no explode, no aggregate, no
-    * shuffle. Fallback: explode + `min(xxhash64(h, k))` aggregates (long
-    * arithmetic only — the expensive string hashing happened once in
-    * [[shingleHashes]]). Bit-identical results. */
+  /** (id, sig): all `numHashes` minhashes per doc — one narrow projection
+    * through graft_minhash_sig: no explode, no aggregate, no shuffle. */
   private def docSignatures(
       df: DataFrame, idCol: String, textCol: String, n: Int, numHashes: Int): DataFrame =
-    if (nativeFnsAvailable(df))
-      df.select(col(idCol).as("id"), shingleHashesFor(df, col(textCol), n).as("gs"))
-        .filter(size(col("gs")) > 0)
-        .select(col("id"),
-          call_function(graft.functions.TilePairs.MinhashName,
-            col("gs"), lit(numHashes)).as("sig"))
-    else {
-      val hashed = explodedHashes(df, idCol, textCol, n)
-      val minAggs =
-        (0 until numHashes).map(k => min(xxhash64(col("h"), lit(k))).as(s"m$k"))
-      hashed.groupBy(col("id")).agg(minAggs.head, minAggs.tail: _*)
-        .select(col("id"),
-          array((0 until numHashes).map(k => col(s"m$k")): _*).as("sig"))
-    }
-
-  /** Minhash signature from an already-computed shingle-hash array — the
-    * HOF fallback twin of the native Minhash kernel. Bit-identical to the
-    * exploded `min(xxhash64(h, k))` aggregate formulation (same hashes,
-    * same min), but a pure narrow projection over `gs`. */
-  private def sigFromGs(gs: Column, numHashes: Int): Column =
-    transform(sequence(lit(0), lit(numHashes - 1)),
-      k => array_min(transform(gs, h => xxhash64(h, k))))
+    df.select(col(idCol).as("id"), graftShingleHashes(col(textCol), n).as("gs"))
+      .filter(size(col("gs")) > 0)
+      .select(col("id"), graftMinhashSig(col("gs"), numHashes).as("sig"))
 
   /** Per-doc LSH features computed ONCE: (id, gs, sz, sig) — the shingle
     * hash array, its size, and the minhash signature. Every downstream
@@ -483,37 +356,29 @@ object Dedup {
     * in the minhash machinery). */
   private def distinctFeats(reps: DataFrame, n: Int, numHashes: Int): DataFrame = {
     val withGs = reps
-      .select(col("id"), shingleHashesFor(reps, col("text"), n).as("gs"))
+      .select(col("id"), graftShingleHashes(col("text"), n).as("gs"))
       .filter(size(col("gs")) > 0)
     withGs.select(
       col("id"), col("gs"), size(col("gs")).cast("int").as("sz"),
-      (if (nativeFnsAvailable(reps))
-         call_function(graft.functions.TilePairs.MinhashName, col("gs"), lit(numHashes))
-       else sigFromGs(col("gs"), numHashes)).as("sig"))
+      graftMinhashSig(col("gs"), numHashes).as("sig"))
   }
 
   /** Adds a minhash signature column for banded consumers outside this file
     * (the streaming near-dup ingest dedup): NULL for docs with no shingles —
-    * callers route those to a per-doc unique key. Native kernel when
-    * installed, HOF fallback otherwise; bit-identical either way.
+    * callers route those to a per-doc unique key.
     *
     * DataFrame-in/DataFrame-out (not a bare Column) so the shingle-hash
     * array lands in its OWN projection first: the signature expression
-    * references `gs` twice (size guard + per-hash min), and in the HOF
-    * fallback it sits inside a ×numHashes lambda — an un-materialized `gs`
-    * would re-shingle the full text per hash. CollapseProject keeps the
-    * split because the array is non-cheap and multiply-referenced (the same
-    * guarantee [[distinctFeats]] builds on). */
+    * references `gs` twice (size guard + signature), and an
+    * un-materialized `gs` would re-shingle the full text per reference.
+    * CollapseProject keeps the split because the array is non-cheap and
+    * multiply-referenced (the same guarantee [[distinctFeats]] builds on). */
   private[graft] def withMinhashSig(
       df: DataFrame, text: Column, n: Int, numHashes: Int, outCol: String): DataFrame = {
     val gsCol = "__graft_sig_gs"
-    val withGs = df.withColumn(gsCol, shingleHashesFor(df, text, n))
-    val sig =
-      if (nativeFnsAvailable(df))
-        call_function(graft.functions.TilePairs.MinhashName, col(gsCol), lit(numHashes))
-      else sigFromGs(col(gsCol), numHashes)
-    withGs
-      .withColumn(outCol, when(size(col(gsCol)) > 0, sig))
+    df.withColumn(gsCol, graftShingleHashes(text, n))
+      .withColumn(outCol,
+        when(size(col(gsCol)) > 0, graftMinhashSig(col(gsCol), numHashes)))
       .drop(gsCol)
   }
 
@@ -762,11 +627,6 @@ object Dedup {
   ): DataFrame = {
     val banded = bandedSignatures(sigDf, numHashes, bands, Seq("sig"))
     val estMin = math.ceil(estThreshold * numHashes).toInt
-    val est: (Column, Column) => Column = (x, y) =>
-      aggregate(
-        zip_with(x("sig"), y("sig"), (a, b) => (a === b).cast("int")),
-        lit(0),
-        (acc, v) => acc + v)
     val buckets = BucketCap.capped(
       banded
         .groupBy("band", "band_hash")
@@ -777,20 +637,11 @@ object Dedup {
     // from the FIRST band whose hashes agree — so the distinct pair set
     // falls out of the expansion itself and the dropDuplicates shuffle of
     // one row per (pair × shared band) disappears (optimization guide
-    // §2.4; equivalence + cap note at SigEstCanonicalPairs' scaladoc). The
-    // HOF fallback keeps the per-band emission + dropDuplicates.
-    if (nativeTilePairsAvailable(sigDf))
-      expandBucketsNative(
-        buckets, keys, graft.functions.TilePairs.SigEstCanonicalName,
-        lit(estMin), col("band"), lit(numHashes / bands))
-        .select(col("p.a").as("id_a"), col("p.b").as("id_b"))
-    else
-      expandBuckets(
-        buckets, keys,
-        (x, y) => est(x, y) >= estMin,
-        (x, y) => struct(x("id").as("a"), y("id").as("b")))
-        .select(col("p.a").as("id_a"), col("p.b").as("id_b"))
-        .dropDuplicates("id_a", "id_b")
+    // §2.4; equivalence + cap note at SigEstCanonicalPairs' scaladoc)
+    expandSymmetricBuckets(
+      buckets, keys, graft.functions.TilePairs.SigEstCanonicalName,
+      lit(estMin), col("band"), lit(numHashes / bands))
+      .select(col("p.a").as("id_a"), col("p.b").as("id_b"))
   }
 
   /** Production near-dup pattern: MinHash-LSH candidate generation + EXACT
@@ -857,40 +708,20 @@ object Dedup {
   ): DataFrame = {
     val hashed = feats.select(col("id"), explode(col("gs")).as("h"))
     smallVocabFreq(hashed) match { case Some(entries) =>
-      // (id, sz, bm, sig): native path is ONE narrow projection over the
-      // stored arrays (bitmap kernel over gs, signature already computed);
-      // fallback joins the dictionary-aggregated bitmaps onto the stored
-      // signatures.
+      // (id, sz, bm, sig): ONE narrow projection over the stored arrays
+      // (bitmap kernel over gs, signature already computed)
       val d = rarityDict(entries)
-      val words = d.words
-      val sigd =
-        if (nativeFnsAvailable(feats))
-          feats.select(col("id"), col("sz"),
-            call_function(graft.functions.TilePairs.BitmapName, col("gs"),
-              typedLit(d.vocabSorted.toSeq), typedLit(d.rankOf.toSeq)).as("bm"),
-            col("sig"))
-        else
-          bitmapFeatures(hashed, dictionaryDf(feats, entries.map(_._1).sorted), words)
-            .join(feats.select(col("id"), col("sig")), "id")
+      val sigd = feats.select(col("id"), col("sz"), graftBitmap(col("gs"), d).as("bm"),
+        col("sig"))
       val banded = bandedSignatures(sigd, numHashes, bands, Seq("sz", "bm"))
       val buckets = BucketCap.capped(
         banded
           .groupBy("band", "band_hash")
           .agg(sort_array(collect_list(struct(col("id"), col("sz"), col("bm")))).as("xs")),
         maxBucketSize, "minhashDedupPairs")
-      val keys = Seq(col("band"), col("band_hash"))
-      val expanded =
-        if (nativeTilePairsAvailable(feats))
-          expandBucketsNative(
-            buckets, keys, graft.functions.TilePairs.JaccardName, lit(threshold))
-        else
-          expandBuckets(
-            buckets, keys,
-            (x, y) => lengthCompatible(x, y, threshold) &&
-              bitmapJaccard(x, y, words) >= threshold,
-            (x, y) => struct(
-              x("id").as("a"), y("id").as("b"), bitmapJaccard(x, y, words).as("j")))
-      expanded
+      expandSymmetricBuckets(
+        buckets, Seq(col("band"), col("band_hash")),
+        graft.functions.TilePairs.JaccardName, lit(threshold))
         .select(col("p.a").as("id_a"), col("p.b").as("id_b"), col("p.j").as("jaccard"))
         .dropDuplicates("id_a", "id_b")
     case None =>
@@ -1019,19 +850,9 @@ object Dedup {
     val repPairs = smallVocabFreq(hashedUnion) match {
       case Some(entries) =>
         val d = rarityDict(entries)
-        val words = d.words
         def sided(feats: DataFrame, p: String): DataFrame = {
-          val sigd =
-            if (nativeFnsAvailable(feats))
-              feats.select(col("id"), col("sz"),
-                call_function(graft.functions.TilePairs.BitmapName, col("gs"),
-                  typedLit(d.vocabSorted.toSeq), typedLit(d.rankOf.toSeq)).as("bm"),
-                col("sig"))
-            else {
-              val hashed = feats.select(col("id"), explode(col("gs")).as("h"))
-              val bf = bitmapFeatures(hashed, dictionaryDf(feats, entries.map(_._1).sorted), words)
-              feats.select(col("id"), col("sig")).join(bf, "id")
-            }
+          val sigd = feats.select(col("id"), col("sz"),
+            graftBitmap(col("gs"), d).as("bm"), col("sig"))
           bandedSignatures(sigd, numHashes, bands, Seq("sz", "bm"))
             .select(col("id").as(s"${p}id"), col("sz").as(s"${p}sz"),
               col("bm").as(s"${p}bm"), col("band"), col("band_hash"))
@@ -1047,11 +868,7 @@ object Dedup {
           .join(bucketize(sided(r.feats, "r"), "rxs"), Seq("band", "band_hash"))
         expandCrossBuckets(
           buckets, Seq(col("band"), col("band_hash")),
-          graft.functions.TilePairs.JaccardName, lit(threshold),
-          (x, y) => lengthCompatible(x, y, threshold) &&
-            bitmapJaccard(x, y, words) >= threshold,
-          (x, y) => struct(
-            x("id").as("a"), y("id").as("b"), bitmapJaccard(x, y, words).as("j")))
+          graft.functions.TilePairs.JaccardName, lit(threshold))
           .select(col("p.a").as("left_id"), col("p.b").as("right_id"),
             col("p.j").as("jaccard"))
           .dropDuplicates("left_id", "right_id")
@@ -1070,15 +887,9 @@ object Dedup {
             col(s"${out.head}id").as("id"), col(s"${out.head}sig").as("sig"))).as(out))
         val sigBuckets = bucketizeSig(sidedSig(l.feats, "l"), "lxs")
           .join(bucketizeSig(sidedSig(r.feats, "r"), "rxs"), Seq("band", "band_hash"))
-        val est: (Column, Column) => Column = (x, y) =>
-          aggregate(
-            zip_with(x("sig"), y("sig"), (a, b) => (a === b).cast("int")),
-            lit(0), (acc, v) => acc + v)
         val cands = expandCrossBuckets(
           sigBuckets, Seq(col("band"), col("band_hash")),
-          graft.functions.TilePairs.SigEstName, lit(estMin),
-          (x, y) => est(x, y) >= estMin,
-          (x, y) => struct(x("id").as("a"), y("id").as("b")))
+          graft.functions.TilePairs.SigEstName, lit(estMin))
           .select(col("p.a").as("left_id"), col("p.b").as("right_id"))
           .dropDuplicates("left_id", "right_id")
         // un-hinted semijoin prune (see verifiedJaccardPairs): candidate
@@ -1375,15 +1186,10 @@ object Dedup {
     * ONE fold over the token-hash array carries all 64 vote counters in an
     * array accumulator (the naive form — 64 separate folds — re-evaluates
     * the tokenization per bit and is 64× the work). Pure expression, no
-    * shuffle. */
-  /** [[simhash]] through the native kernel (bit-identical) when
-    * GraftExtensions is installed on the session. */
-  def simhashFor(df: DataFrame, text: Column): Column =
-    if (nativeFnsAvailable(df))
-      call_function(graft.functions.TilePairs.SimhashName, text)
-    else simhash(text)
-
-  def simhash(text: Column): Column = {
+    * shuffle. Pure-Column reference for the graft_simhash kernel
+    * (FunctionsSpec pins bit-parity); [[graftSimhash]] is what the
+    * operators call. */
+  private[graft] def simhash(text: Column): Column = {
     val hashes = transform(
       filter(split(lower(text), "\\s+"), t => t =!= ""),
       t => xxhash64(t))
@@ -1403,6 +1209,10 @@ object Dedup {
       (acc, x) => acc + x)
   }
 
+  /** [[simhash]] through the native graft_simhash kernel. */
+  private[graft] def graftSimhash(text: Column): Column =
+    call_function(graft.functions.TilePairs.SimhashName, text)
+
   /** SimHash near-duplicate pairs with Hamming distance ≤ `maxHamming`.
     *
     * Candidate generation: split the 64-bit simhash into 4 16-bit chunks;
@@ -1421,9 +1231,7 @@ object Dedup {
       maxHamming: Int = 3,
       maxBucketSize: Int = 100000,
   ): DataFrame = {
-    val sh = df.select(col(idCol).as("id"), simhashFor(df, col(textCol)).as("sh"))
-    val hamming: (Column, Column) => Column =
-      (x, y) => bit_count(x("sh").bitwiseXOR(y("sh")))
+    val sh = df.select(col(idCol).as("id"), graftSimhash(col(textCol)).as("sh"))
     val buckets = sh
       .select(col("id"), col("sh"), explode(sequence(lit(0), lit(3))).as("chunk"))
       .select(
@@ -1434,17 +1242,9 @@ object Dedup {
       .groupBy("chunk", "chunk_val")
       .agg(sort_array(collect_list(col("row"))).as("xs"))
     val cappedBuckets = BucketCap.capped(buckets, maxBucketSize, "simhashCandidates")
-    val keys = Seq(col("chunk"), col("chunk_val"))
-    val expanded =
-      if (nativeTilePairsAvailable(df))
-        expandBucketsNative(
-          cappedBuckets, keys, graft.functions.TilePairs.HammingName, lit(maxHamming))
-      else
-        expandBuckets(
-          cappedBuckets, keys,
-          (x, y) => hamming(x, y) <= maxHamming,
-          (x, y) => struct(x("id").as("a"), y("id").as("b"), hamming(x, y).as("h")))
-    expanded
+    expandSymmetricBuckets(
+      cappedBuckets, Seq(col("chunk"), col("chunk_val")),
+      graft.functions.TilePairs.HammingName, lit(maxHamming))
       .select(col("p.a").as("id_a"), col("p.b").as("id_b"), col("p.h").as("hamming"))
       .dropDuplicates("id_a", "id_b")
   }
@@ -1512,61 +1312,38 @@ object Dedup {
     }
     smallVocabFreq(hashed) match { case Some(entries) =>
       val d = rarityDict(entries)
-      val words = d.words
-      if (nativeFnsAvailable(df)) {
-        // Small-vocab native path: the vocabulary AND its frequencies are on
-        // the driver, so the prefix filter needs no freq join and no per-doc
-        // window — bit r of a doc's bitmap is its r-th rarest shingle, so
-        // the prefix is just the first k set bits (restricted to ranks under
-        // the stop-gram cap). One projection + one groupBy.
-        val eligible = d.freqByRank.count(_ <= maxShingleFreq)
-        if (eligible == 0)
-          return df.select(col("id").as("id_a"), col("id").as("id_b"),
-            lit(0.0).as("jaccard")).limit(0)
-        val feats = nativeFeatures(df, idCol, textCol, n, d).drop("gs")
-        val isSet = (i: Column) =>
-          call_function("shiftrightunsigned",
-            element_at(col("bm"), call_function("shiftright", i, lit(6)) + 1),
-            i.bitwiseAND(lit(63))).bitwiseAND(lit(1L)) === 1L
-        val kPrefix = (col("sz") - ceil(col("sz") * threshold).cast("int") + 1)
-        val buckets = feats
-          .withColumn("pid",
-            explode(slice(filter(sequence(lit(0), lit(eligible - 1)), isSet),
-              lit(1), kPrefix)))
-          .groupBy("pid")
-          .agg(sort_array(collect_list(struct(col("id"), col("sz"), col("bm")))).as("xs"))
-          .filter(size(col("xs")) > 1)
-        // canonical-bucket kernel: every qualifying pair is emitted exactly
-        // once — from its smallest common prefix shingle's bucket — so the
-        // result IS the distinct pair set and the dropDuplicates shuffle
-        // (1.9 GB written + 1.9 GB spilled on the r15 calibration corpus)
-        // does not exist (optimization guide §2.4 "remove shuffles
-        // outright"; equivalence argument at JaccardPrefixPairs' scaladoc)
-        expandBucketsNative(
-          buckets, Seq(col("pid")), graft.functions.TilePairs.JaccardPfxName,
-          lit(threshold), col("pid"), lit(eligible))
-          .select(col("p.a").as("id_a"), col("p.b").as("id_b"), col("p.j").as("jaccard"))
-      } else {
-        val dict = dictionaryDf(df, entries.map(_._1).sorted)
-        val feats = bitmapFeatures(hashed, dict, words)
-        // true set size (and bitmap) from feats — the prefix frame's sz is the
-        // POST-stop-gram-cap posting count, fine for the prefix-length bound
-        // but not for the Jaccard denominator when the cap triggers
-        val buckets = prefix
-          .select("id", "h")
-          .join(feats.select(col("id"), col("sz"), col("bm")), "id")
-          .groupBy("h")
-          .agg(sort_array(collect_list(struct(col("id"), col("sz"), col("bm")))).as("xs"))
-          .filter(size(col("xs")) > 1)
-        expandBuckets(
-          buckets, Seq(col("h")),
-          (x, y) => lengthCompatible(x, y, threshold) &&
-            bitmapJaccard(x, y, words) >= threshold,
-          (x, y) => struct(
-            x("id").as("a"), y("id").as("b"), bitmapJaccard(x, y, words).as("j")))
-          .select(col("p.a").as("id_a"), col("p.b").as("id_b"), col("p.j").as("jaccard"))
-          .dropDuplicates("id_a", "id_b")
-      }
+      // Small-vocab path: the vocabulary AND its frequencies are on
+      // the driver, so the prefix filter needs no freq join and no per-doc
+      // window — bit r of a doc's bitmap is its r-th rarest shingle, so
+      // the prefix is just the first k set bits (restricted to ranks under
+      // the stop-gram cap). One projection + one groupBy.
+      val eligible = d.freqByRank.count(_ <= maxShingleFreq)
+      if (eligible == 0)
+        return df.select(col("id").as("id_a"), col("id").as("id_b"),
+          lit(0.0).as("jaccard")).limit(0)
+      val feats = nativeFeatures(df, idCol, textCol, n, d).drop("gs")
+      val isSet = (i: Column) =>
+        call_function("shiftrightunsigned",
+          element_at(col("bm"), call_function("shiftright", i, lit(6)) + 1),
+          i.bitwiseAND(lit(63))).bitwiseAND(lit(1L)) === 1L
+      val kPrefix = (col("sz") - ceil(col("sz") * threshold).cast("int") + 1)
+      val buckets = feats
+        .withColumn("pid",
+          explode(slice(filter(sequence(lit(0), lit(eligible - 1)), isSet),
+            lit(1), kPrefix)))
+        .groupBy("pid")
+        .agg(sort_array(collect_list(struct(col("id"), col("sz"), col("bm")))).as("xs"))
+        .filter(size(col("xs")) > 1)
+      // canonical-bucket kernel: every qualifying pair is emitted exactly
+      // once — from its smallest common prefix shingle's bucket — so the
+      // result IS the distinct pair set and the dropDuplicates shuffle
+      // (1.9 GB written + 1.9 GB spilled on the r15 calibration corpus)
+      // does not exist (optimization guide §2.4 "remove shuffles
+      // outright"; equivalence argument at JaccardPrefixPairs' scaladoc)
+      expandSymmetricBuckets(
+        buckets, Seq(col("pid")), graft.functions.TilePairs.JaccardPfxName,
+        lit(threshold), col("pid"), lit(eligible))
+        .select(col("p.a").as("id_a"), col("p.b").as("id_b"), col("p.j").as("jaccard"))
     case None =>
       val a = prefix.select(col("id").as("id_a"), col("sz").as("sz_a"), col("h"))
       val b = prefix.select(col("id").as("id_b"), col("sz").as("sz_b"), col("h"))
@@ -1584,19 +1361,20 @@ object Dedup {
 
   /** Distinct lowercased whitespace-token n-grams of a text column, hashed
     * with Spark's xxhash64 — the overlap unit for exact decontamination.
-    * The native kernel does one buffer pass per doc; the Column fallback is
-    * bit-identical but interpreted (and re-evaluated per consuming subtree,
-    * since Catalyst does no CSE across them). */
-  private def tokenNgramHashes(textCol: Column, n: Int, native: Boolean): Column =
-    if (native)
-      call_function(graft.functions.TilePairs.TokenNgramName, textCol, lit(n))
-    else {
-      val toks = graft.ops.TextOps.tokens(lower(textCol))
-      when(size(toks) >= n,
-        array_distinct(transform(sequence(lit(0), size(toks) - n),
-          i => xxhash64(concat_ws(" ", slice(toks, i + lit(1), lit(n)))))))
-        .otherwise(array().cast("array<bigint>"))
-    }
+    * One buffer pass per doc in the native kernel. */
+  private def tokenNgramHashes(textCol: Column, n: Int): Column =
+    call_function(graft.functions.TilePairs.TokenNgramName, textCol, lit(n))
+
+  /** Pure-Column reference for [[tokenNgramHashes]] (FunctionsSpec pins
+    * bit-parity): bit-identical but interpreted, and re-evaluated per
+    * consuming subtree, since Catalyst does no CSE across them. */
+  private[graft] def tokenNgramHashesFallback(textCol: Column, n: Int): Column = {
+    val toks = graft.ops.TextOps.tokens(lower(textCol))
+    when(size(toks) >= n,
+      array_distinct(transform(sequence(lit(0), size(toks) - n),
+        i => xxhash64(concat_ws(" ", slice(toks, i + lit(1), lit(n)))))))
+      .otherwise(array().cast("array<bigint>"))
+  }
 
   /** Exact token-n-gram decontamination (the "shared 13-gram" rule used to
     * scrub pretraining corpora against evaluation benchmarks): for each
@@ -1607,8 +1385,8 @@ object Dedup {
     * one leaked benchmark sentence in a 10k-token document flags it.
     *
     * Scale shape: the benchmark side (small — eval sets, not the corpus)
-    * reduces to one distinct-hash table plus, when the native bloom kernel
-    * is registered, a single bloom-filter binary (~`bloomBitsPerKey` bits
+    * reduces to one distinct-hash table plus (unless `useBloom = false`) a
+    * single bloom-filter binary (~`bloomBitsPerKey` bits
     * per key) built by one aggregate and broadcast as a one-row constant.
     * The 100-TB corpus side then drops non-candidate n-grams in a NARROW
     * filter before anything shuffles; only bloom survivors (true overlaps
@@ -1794,8 +1572,8 @@ object Dedup {
 
   /** Fitted decontamination index — the benchmark side of
     * [[ngramOverlapContamination]] reduced to what the probe needs: the
-    * distinct token-n-gram hash table (exact verify) and, when the native
-    * bloom kernel built it, the sized bloom prefilter bytes. Fit ONCE on
+    * distinct token-n-gram hash table (exact verify) and, unless the fit
+    * ran with `useBloom = false`, the sized bloom prefilter bytes. Fit ONCE on
     * the benchmark suite ([[contaminationFit]]), [[save]] it, and
     * [[ContaminationIndex.load]]+[[contaminationApply]] at every ingest
     * point — the benchmarks are never re-tokenized per batch.
@@ -1848,7 +1626,8 @@ object Dedup {
   }
 
   /** Persistable seen-key index: the distinct key strings of an ingested
-    * corpus plus (native sessions) a bloom filter over their xxhash64 —
+    * corpus plus (unless `useBloom = false`) a bloom filter over their
+    * xxhash64 —
     * the CCNet-style "have we crawled this URL before?" structure.
     * Fit once per corpus drop ([[keyIndexFit]]), save, and probe every
     * incoming batch ([[keyIndexApply]]) without ever touching the corpus
@@ -1907,15 +1686,12 @@ object Dedup {
     require(bloomBitsPerKey >= 1, "bloomBitsPerKey must be >= 1")
     require(bloomHashes >= 1 && bloomHashes <= 32, "bloomHashes must be in [1, 32]")
     graft.core.Validators.requireColumns(corpus, Seq(keyCol))
-    val spark = corpus.sparkSession
     val keys = materialize(corpus
       .filter(col(keyCol).isNotNull)
       .select(col(keyCol).cast("string").as("__graft_key"))
       .distinct())
-    val bloomOk = !ForceFallback && useBloom &&
-      spark.catalog.functionExists(graft.functions.TilePairs.BloomAggName)
     val bloom =
-      if (bloomOk) {
+      if (useBloom) {
         val n = keys.count()
         val bits = math.max(64L,
           math.min(n * bloomBitsPerKey, Int.MaxValue.toLong - 63))
@@ -1939,8 +1715,8 @@ object Dedup {
     * + the ~0.04%-at-16-bits false positives) enter the exact LEFT ANTI
     * verify join against the key table. The batch side is read twice, but
     * an ingest batch is daily-sized next to the corpus the index replaced
-    * — the corpus itself is never scanned at probe time at all. Without
-    * the kernel, the whole batch takes the one anti join.
+    * — the corpus itself is never scanned at probe time at all. A
+    * bloom-less index sends the whole batch through the one anti join.
     *
     * STREAMING: works unchanged on a streaming `incoming` — the bloom leg
     * is a stateless narrow filter and the verify leg is a stream-static
@@ -1952,13 +1728,10 @@ object Dedup {
       keyCol: String,
       index: KeyIndex): DataFrame = {
     graft.core.Validators.requireColumns(incoming, Seq(keyCol))
-    val spark = incoming.sparkSession
-    val bloomOk = !ForceFallback && index.bloom.isDefined &&
-      spark.catalog.functionExists(graft.functions.TilePairs.BloomContainsName)
     val k = col(keyCol).cast("string")
     def verified(df: DataFrame): DataFrame =
       df.join(index.keys, k === col("__graft_key"), "left_anti")
-    if (bloomOk) {
+    if (index.bloom.isDefined) {
       val hit = call_function(graft.functions.TilePairs.BloomContainsName,
         lit(index.bloom.get), xxhash64(k), lit(index.bloomHashes))
       // The two legs fork the SAME input. Left unmaterialized, Catalyst
@@ -1982,8 +1755,8 @@ object Dedup {
 
   /** Build a [[ContaminationIndex]] from a benchmark corpus: one distinct
     * aggregate over the exploded token-n-gram hashes, one count to size
-    * the bloom filter, one bloom-build aggregate (native kernel only —
-    * vanilla sessions get an exact-join-only index). The hash table is
+    * the bloom filter, one bloom-build aggregate (skipped with
+    * `useBloom = false`: an exact-join-only index). The hash table is
     * materialized so the count, bloom build, and every later probe reuse
     * it instead of re-tokenizing the benchmarks. */
   def contaminationFit(
@@ -1997,16 +1770,11 @@ object Dedup {
     require(bloomBitsPerKey >= 1, "bloomBitsPerKey must be >= 1")
     require(bloomHashes >= 1 && bloomHashes <= 32, "bloomHashes must be in [1, 32]")
     graft.core.Validators.requireColumns(benchmark, Seq(textCol))
-    val spark = benchmark.sparkSession
-    val native = !ForceFallback &&
-      spark.catalog.functionExists(graft.functions.TilePairs.TokenNgramName)
     val benchHashes = materialize(benchmark
-      .select(explode(tokenNgramHashes(col(textCol), n, native)).as("__graft_h"))
+      .select(explode(tokenNgramHashes(col(textCol), n)).as("__graft_h"))
       .distinct())
-    val bloomOk = !ForceFallback && useBloom &&
-      spark.catalog.functionExists(graft.functions.TilePairs.BloomAggName)
     val bloom =
-      if (bloomOk) {
+      if (useBloom) {
         // fit-time count sizes the filter; the cap (256 MB) is BloomBuildAgg's
         val keys = benchHashes.count()
         val bits = math.max(64L,
@@ -2022,9 +1790,7 @@ object Dedup {
   /** The probe side of [[ngramOverlapContamination]] against a fitted (or
     * loaded) [[ContaminationIndex]]: per corpus document, the number of its
     * distinct token n-grams present in the index; documents below
-    * `minOverlap` are dropped. The token hashing is bit-identical between
-    * the native kernel and the Column fallback, so an index fit on one
-    * session probes correctly on the other. */
+    * `minOverlap` are dropped. */
   def contaminationApply(
       corpus: DataFrame,
       idCol: String,
@@ -2033,16 +1799,11 @@ object Dedup {
       minOverlap: Int = 1): DataFrame = {
     require(minOverlap >= 1, "minOverlap must be >= 1")
     graft.core.Validators.requireColumns(corpus, Seq(idCol, textCol))
-    val spark = corpus.sparkSession
-    val native = !ForceFallback &&
-      spark.catalog.functionExists(graft.functions.TilePairs.TokenNgramName)
     val corpusGrams = corpus
       .select(col(idCol).as("__graft_id"),
-        explode(tokenNgramHashes(col(textCol), index.n, native)).as("__graft_h"))
-    val bloomOk = !ForceFallback && index.bloom.isDefined &&
-      spark.catalog.functionExists(graft.functions.TilePairs.BloomContainsName)
+        explode(tokenNgramHashes(col(textCol), index.n)).as("__graft_h"))
     val candidates =
-      if (bloomOk) {
+      if (index.bloom.isDefined) {
         // The filter bytes ride as ONE plan literal (like Spark's own
         // runtime bloom join filters): shipped once per stage in the task
         // binary and referenced in place. A one-row cross join instead

@@ -344,7 +344,9 @@ object LinkGraph {
     * multi-stage job cascade per round — measured as a driver-bound
     * serial segment of warc_frontier_schedule, the suite's slowest
     * query. Rounds are a fixed constant — total shuffles are bounded at
-    * plan time, never data-dependent. */
+    * plan time, never data-dependent. The result is materialized for
+    * every `iterations` value, 0 included, so callers always get the same
+    * construction-time cost and fan-out contract. */
   def domainCentrality(
       edges: DataFrame,
       srcCol: String = "src_domain",
@@ -373,6 +375,6 @@ object LinkGraph {
         .select(col("domain"),
           (lit(1L) + coalesce(col("__graft_in"), lit(0L))).as("centrality"))
     }
-    if (iterations == 0) score else Dedup.materialize(score)
+    Dedup.materialize(score)
   }
 }

@@ -101,18 +101,15 @@ object Multimodal {
     * — the majority format of a real crawl — as big-endian 16-bit ints
     * in the SOF frame header, which floats at a VARIABLE offset behind
     * APPn/DQT/DHT segments and is found by the bounded marker walk of
-    * [[graft.functions.JpegDims]] (O(#segments) jumps, never a decode;
-    * pure-Column [[jpegDimsFallback]] when the extensions are not
-    * installed). WebP — the second-most-common crawl format — walks its
+    * [[graft.functions.JpegDims]] (O(#segments) jumps, never a decode).
+    * WebP — the second-most-common crawl format — walks its
     * RIFF chunks to the codec chunk via [[graft.functions.WebpDims]]
     * (all three container shapes: VP8 lossy, VP8L lossless, VP8X
     * extended canvas). AVIF/HEIC — the fastest-growing web image
     * formats — walk ISO-BMFF boxes to the PRIMARY item's `ispe` via
     * [[graft.functions.IsoBmffDims]] (pitm/ipma resolution with a
     * first-ispe fallback; brand-gated here: avif/avis/heic/heix/heif/
-    * mif1/msf1). Neither container walk has a pure-Column twin, so
-    * WITHOUT GraftExtensions WebP and AVIF/HEIC payloads yield NULL
-    * dims (every other format still answers). Appends
+    * mif1/msf1). Appends
     * `img_width`/`img_height`, NULL for any
     * other format and for payloads too short (or too malformed) to
     * carry their header. One narrow projection. */
@@ -139,21 +136,9 @@ object Multimodal {
     val isAvifHeic = length(b) >= 16 && hex(substring(b, 5, 4)) === "66747970" &&
       hex(substring(b, 9, 4)).isin("61766966", "61766973",
         "68656963", "68656978", "68656966", "6D696631", "6D736631")
-    val jpegDims =
-      if (df.sparkSession.catalog.functionExists(
-          graft.functions.TilePairs.JpegDimsName))
-        call_function(graft.functions.TilePairs.JpegDimsName, b)
-      else jpegDimsFallback(b)
-    val webpDims =
-      if (df.sparkSession.catalog.functionExists(
-          graft.functions.TilePairs.WebpDimsName))
-        call_function(graft.functions.TilePairs.WebpDimsName, b)
-      else lit(null).cast("array<bigint>") // no Column twin of the chunk walk
-    val bmffDims =
-      if (df.sparkSession.catalog.functionExists(
-          graft.functions.TilePairs.IsoBmffDimsName))
-        call_function(graft.functions.TilePairs.IsoBmffDimsName, b)
-      else lit(null).cast("array<bigint>") // no Column twin of the box walk
+    val jpegDims = call_function(graft.functions.TilePairs.JpegDimsName, b)
+    val webpDims = call_function(graft.functions.TilePairs.WebpDimsName, b)
+    val bmffDims = call_function(graft.functions.TilePairs.IsoBmffDimsName, b)
     // one shared array value per row: width/height read the same walk
     // result (whole-stage codegen CSEs the identical deterministic
     // subtree — the walk runs once, not twice)
@@ -172,16 +157,14 @@ object Multimodal {
   /** Segment cap of [[jpegDimsFallback]]'s unrolled walk. Real-world
     * headers sit behind <20 segments; multi-segment ICC profiles can add
     * a few dozen more — a header deeper than this reads as NULL on the
-    * fallback path (the kernel has no such cap; its loop is bounded by
+    * reference path (the kernel has no such cap; its loop is bounded by
     * the forward-progress guarantee alone). */
   val MaxJpegSegments = 48
 
   /** Pure-Column twin of [[graft.functions.JpegDims]] — the same marker
     * walk as an `aggregate` fold over at most [[MaxJpegSegments]] steps
     * (state = (pos, w, h); pos −1 encodes "stopped"). Bit-parity with the
-    * kernel is pinned in FunctionsSpec. Used only when GraftExtensions is
-    * not installed; the folded expression tree is larger than the kernel
-    * call but still one narrow codegen'd projection. */
+    * kernel is pinned in FunctionsSpec; the operators call the kernel. */
   private[graft] def jpegDimsFallback(b: Column): Column = {
     val n = length(b).cast("long")
     def byteAt(pos: Column): Column =
@@ -224,8 +207,7 @@ object Multimodal {
     * also present — `display_width`/`display_height`, the dims AS SHOWN:
     * orientations 5-8 are the transposed ones, so raw SOF width/height
     * swap. A pipeline that filters or buckets by aspect ratio without
-    * this reads every portrait phone photo as landscape.
-    * EXTENSION-REQUIRED (the graft_normalize convention). Expects the
+    * this reads every portrait phone photo as landscape. Expects the
     * [[imageDims]] columns when `withDisplayDims = true`. */
   def withExifOrientation(
       df: DataFrame, binCol: String, withDisplayDims: Boolean = true): DataFrame = {
@@ -235,10 +217,6 @@ object Multimodal {
       df, Seq("img_orientation") ++
         (if (withDisplayDims) Seq("display_width", "display_height") else Nil),
       "withExifOrientation")
-    require(df.sparkSession.catalog.functionExists(
-      graft.functions.TilePairs.ExifOrientationName),
-      "withExifOrientation needs the native EXIF kernel — set " +
-        "spark.sql.extensions=graft.functions.GraftExtensions")
     val out = df.withColumn("img_orientation",
       call_function(graft.functions.TilePairs.ExifOrientationName, col(binCol)))
     if (!withDisplayDims) out
@@ -257,15 +235,11 @@ object Multimodal {
     * `exif_software` (IFD0 ASCII tags 0x010F/0x0110/0x0131; each NULL
     * when absent, all NULL without parseable EXIF). Device priors for
     * curation, and the `software` tag is the cheap synthetic/edited
-    * screen — editor names land there. EXTENSION-REQUIRED. */
+    * screen — editor names land there. */
   def withExifTags(df: DataFrame, binCol: String): DataFrame = {
     graft.core.Validators.requireColumns(df, Seq(binCol))
     graft.core.Validators.requireColumnsAbsent(
       df, Seq("exif_make", "exif_model", "exif_software"), "withExifTags")
-    require(df.sparkSession.catalog.functionExists(
-      graft.functions.TilePairs.ExifTagsName),
-      "withExifTags needs the native EXIF kernel — set " +
-        "spark.sql.extensions=graft.functions.GraftExtensions")
     val t = call_function(graft.functions.TilePairs.ExifTagsName, col(binCol))
     df.withColumn("__graft_xt", t)
       .withColumn("exif_make", col("__graft_xt.make"))
@@ -279,15 +253,11 @@ object Multimodal {
     * `mp3_album` from the ID3v2 text frames (TIT2/TPE1/TALB; v2.3 and
     * v2.4 framing, all four text encodings) — the audio sibling of
     * [[withExifTags]]. Each NULL when the frame is absent; all NULL for
-    * payloads bearing no ID3v2 tag. EXTENSION-REQUIRED. */
+    * payloads bearing no ID3v2 tag. */
   def withMp3Tags(df: DataFrame, binCol: String): DataFrame = {
     graft.core.Validators.requireColumns(df, Seq(binCol))
     graft.core.Validators.requireColumnsAbsent(
       df, Seq("mp3_title", "mp3_artist", "mp3_album"), "withMp3Tags")
-    require(df.sparkSession.catalog.functionExists(
-      graft.functions.TilePairs.Mp3TagsName),
-      "withMp3Tags needs the native ID3 kernel — set " +
-        "spark.sql.extensions=graft.functions.GraftExtensions")
     val t = call_function(graft.functions.TilePairs.Mp3TagsName, col(binCol))
     df.withColumn("__graft_id3", t)
       .withColumn("mp3_title", col("__graft_id3.title"))
@@ -304,14 +274,10 @@ object Multimodal {
     * text reservoir in a crawl; this plugs them into the text-quality /
     * dedup / langid stack with one projection. Rule-based with honest
     * boundaries (no DCT/JPX/LZW filters, no CMap remapping) — see the
-    * kernel doc. EXTENSION-REQUIRED. */
+    * kernel doc. */
   def withPdfText(df: DataFrame, binCol: String): DataFrame = {
     graft.core.Validators.requireColumns(df, Seq(binCol))
     graft.core.Validators.requireColumnsAbsent(df, Seq("pdf_text"), "withPdfText")
-    require(df.sparkSession.catalog.functionExists(
-      graft.functions.TilePairs.PdfTextName),
-      "withPdfText needs the native PDF kernel — set " +
-        "spark.sql.extensions=graft.functions.GraftExtensions")
     df.withColumn("pdf_text",
       call_function(graft.functions.TilePairs.PdfTextName, col(binCol)))
   }
@@ -324,16 +290,12 @@ object Multimodal {
     * creator/producer (the synthetic/converted filter), titles feed
     * metadata dedup, dates feed recrawl priors. Each NULL when absent
     * or indirect; all NULL for non-PDF / encrypted / Info-less
-    * payloads. EXTENSION-REQUIRED. */
+    * payloads. */
   def withPdfInfo(df: DataFrame, binCol: String): DataFrame = {
     graft.core.Validators.requireColumns(df, Seq(binCol))
     graft.core.Validators.requireColumnsAbsent(
       df, Seq("pdf_title", "pdf_author", "pdf_creator", "pdf_producer",
         "pdf_created"), "withPdfInfo")
-    require(df.sparkSession.catalog.functionExists(
-      graft.functions.TilePairs.PdfInfoName),
-      "withPdfInfo needs the native PDF kernel — set " +
-        "spark.sql.extensions=graft.functions.GraftExtensions")
     val t = call_function(graft.functions.TilePairs.PdfInfoName, col(binCol))
     df.withColumn("__graft_pi", t)
       .withColumn("pdf_title", col("__graft_pi.title"))
@@ -351,15 +313,11 @@ object Multimodal {
     * rational triples are absent or defective). All three NULL for
     * payloads with no parseable EXIF. The report half of the
     * image-corpus privacy-release gate; [[stripExifGps]] is the scrub
-    * half. EXTENSION-REQUIRED (the graft_normalize convention). */
+    * half. */
   def withExifGps(df: DataFrame, binCol: String): DataFrame = {
     graft.core.Validators.requireColumns(df, Seq(binCol))
     graft.core.Validators.requireColumnsAbsent(
       df, Seq("gps_present", "gps_lat", "gps_lon"), "withExifGps")
-    require(df.sparkSession.catalog.functionExists(
-      graft.functions.TilePairs.ExifGpsName),
-      "withExifGps needs the native EXIF GPS kernel — set " +
-        "spark.sql.extensions=graft.functions.GraftExtensions")
     val g = call_function(graft.functions.TilePairs.ExifGpsName, col(binCol))
     df.withColumn("__graft_gps", g)
       .withColumn("gps_present", col("__graft_gps.gps_present"))
@@ -376,13 +334,9 @@ object Multimodal {
     * would corrupt them. Payloads without EXIF or without GPS pass
     * through unchanged, so the scrub is safe to run unconditionally
     * across a mixed corpus. [[withExifGps]] on the result reports
-    * `gps_present = false`. EXTENSION-REQUIRED. */
+    * `gps_present = false`. */
   def stripExifGps(df: DataFrame, binCol: String): DataFrame = {
     graft.core.Validators.requireColumns(df, Seq(binCol))
-    require(df.sparkSession.catalog.functionExists(
-      graft.functions.TilePairs.ExifGpsStripName),
-      "stripExifGps needs the native EXIF GPS kernel — set " +
-        "spark.sql.extensions=graft.functions.GraftExtensions")
     df.withColumn(binCol,
       call_function(graft.functions.TilePairs.ExifGpsStripName, col(binCol)))
   }
@@ -411,25 +365,13 @@ object Multimodal {
     * generates) and the raw `media_dur_num`/`media_dur_den` pair, NULL
     * for other formats or unparseable headers. A truncated
     * capture with an intact header still answers — the declared duration
-    * is what a curation pipeline filters on.
-    *
-    * EXTENSION-REQUIRED (the graft_normalize convention): the chunk/box
-    * walks are native kernels with no pure-Column twin — install
-    * GraftExtensions. One narrow projection, whole-stage codegen. */
+    * is what a curation pipeline filters on. One narrow projection,
+    * whole-stage codegen. */
   def withMediaDuration(df: DataFrame, binCol: String): DataFrame = {
     graft.core.Validators.requireColumns(df, Seq(binCol))
     graft.core.Validators.requireColumnsAbsent(
       df, Seq("media_duration_sec", "media_dur_num", "media_dur_den"),
       "withMediaDuration")
-    val fns = Seq(graft.functions.TilePairs.RiffDurationName,
-      graft.functions.TilePairs.Mp4DurationName,
-      graft.functions.TilePairs.Mp3DurationName,
-      graft.functions.TilePairs.FlacDurationName,
-      graft.functions.TilePairs.OggDurationName,
-      graft.functions.TilePairs.WebmDurationName)
-    require(fns.forall(df.sparkSession.catalog.functionExists),
-      "withMediaDuration needs the native media kernels — set " +
-        "spark.sql.extensions=graft.functions.GraftExtensions")
     val b = col(binCol)
     val isWav = length(b) >= 12 && hex(substring(b, 1, 4)) === "52494646" &&
       hex(substring(b, 9, 4)) === "57415645"

@@ -431,19 +431,18 @@ object Retrieval {
     import org.apache.spark.sql.expressions.Window
     graft.core.Validators.requireColumns(corpusEmb, Seq(eIdCol, eEmbCol))
     graft.core.Validators.requireColumns(queryEmb, Seq(qeIdCol, qeEmbCol))
-    val d = Similarity.dotFor(corpusEmb)
     val e = corpusEmb
       .select(col(eIdCol).as("id"), col(eEmbCol).as("emb"))
-      .withColumn("nrm", sqrt(d(col("emb"), col("emb"))))
+      .withColumn("nrm", sqrt(Similarity.graftDot(col("emb"), col("emb"))))
       .filter(col("nrm") > 0.0 && col("nrm") <= Double.MaxValue)
     val q = broadcast(
       queryEmb.select(col(qeIdCol).as("query_id"), col(qeEmbCol).as("qemb"))
-        .withColumn("qnrm", sqrt(d(col("qemb"), col("qemb"))))
+        .withColumn("qnrm", sqrt(Similarity.graftDot(col("qemb"), col("qemb"))))
         .filter(col("qnrm") > 0.0 && col("qnrm") <= Double.MaxValue))
     e.join(broadcast(shortlist), Seq("id"))
       .join(q, Seq("query_id"))
       .select(col("query_id"), col("id"), col("bm25"),
-        round(d(col("emb"), col("qemb")) / (col("nrm") * col("qnrm")), 9).as("cos"))
+        round(Similarity.graftDot(col("emb"), col("qemb")) / (col("nrm") * col("qnrm")), 9).as("cos"))
       .withColumn("__rn", row_number().over(
         Window.partitionBy("query_id").orderBy(col("cos").desc, col("id").asc)))
       .filter(col("__rn") <= k)
@@ -777,26 +776,8 @@ object Retrieval {
       seed: Long = 42L): DataFrame = {
     require(dim >= 1, "dim must be >= 1")
     graft.core.Validators.requireColumns(df, Seq(textCol))
-    // the graft_hash_embed kernel is the hot path: the Column fold below
-    // walks the interpreted HOF evaluator O(tokens · dim) per row (33 s
-    // over 5 k sf0.1 docs at dim 16); the kernel is one codegen'd loop,
-    // bit-identical (FunctionsSpec pins parity)
-    val accum =
-      if (df.sparkSession.catalog.functionExists(
-        graft.functions.TilePairs.HashEmbedName))
-        call_function(graft.functions.TilePairs.HashEmbedName,
-          col(textCol), lit(dim), lit(seed))
-      else {
-        val toks = TextOps.tokens(lower(col(textCol)))
-        val bs = transform(toks, t => struct(
-          hashBucket(t, dim, seed).as("b"),
-          hashSign(t, seed).as("s")))
-        aggregate(
-          bs,
-          array_repeat(lit(0.0), dim),
-          (acc, x) => transform(acc,
-            (v, i) => v + when(i === x("b"), x("s")).otherwise(lit(0.0))))
-      }
+    val accum = call_function(graft.functions.TilePairs.HashEmbedName,
+      col(textCol), lit(dim), lit(seed))
     val raw = coalesce(accum, array_repeat(lit(0.0), dim))
     val nrm = sqrt(Similarity.dot(raw, raw))
     df.withColumn("__graft_raw", raw)
@@ -806,6 +787,21 @@ object Retrieval {
           transform(col("__graft_raw"), v => v / nrm))
           .otherwise(col("__graft_raw")))
       .drop("__graft_raw")
+  }
+
+  /** Pure-Column reference for the graft_hash_embed kernel's count vector
+    * (FunctionsSpec pins bit-parity): the same signed-bucket fold, walked
+    * by the interpreted HOF evaluator O(tokens · dim) per row — 33 s over
+    * 5 k sf0.1 docs at dim 16, where the kernel is one codegen'd loop. */
+  private[graft] def hashEmbedFallback(text: Column, dim: Int, seed: Long): Column = {
+    val bs = transform(TextOps.tokens(lower(text)), t => struct(
+      hashBucket(t, dim, seed).as("b"),
+      hashSign(t, seed).as("s")))
+    aggregate(
+      bs,
+      array_repeat(lit(0.0), dim),
+      (acc, x) => transform(acc,
+        (v, i) => v + when(i === x("b"), x("s")).otherwise(lit(0.0))))
   }
 
   /** The bucket half of the hashing trick: xxhash64(seed, t) mod dim. */

@@ -193,9 +193,8 @@ object Robots {
     * join keyed on host (hosts-sized build side: AQE broadcasts it),
     * and the verdict is the first array entry whose pattern matches —
     * the [[graft.functions.RobotsVerdict]] kernel (compiled patterns
-    * memoized per executor) when GraftExtensions is installed, a
-    * per-row higher-order `filter` otherwise; either way the URL side
-    * never shuffles and never widens. The regex evaluation count is
+    * memoized per executor); the URL side never shuffles and never
+    * widens. The regex evaluation count is
     * the same per (url, same-host rule) bound as a join-condition
     * match — robots files are tens of rules. STREAM-CAPABLE: every
     * URL-side op is a
@@ -236,22 +235,21 @@ object Robots {
             concat(lit("?"), regexp_extract(noFrag, "\\?(.*)$", 1)))
             .otherwise(lit(""))))
     // first-match verdict: the native kernel memoizes compiled patterns
-    // per executor (a non-foldable regexp_like pays Pattern.compile per
-    // row × rule — pure CPU burn at crawl scale on identical host-level
-    // patterns); pure-Column twin on vanilla sessions, bit-parity-tested
-    val verdict =
-      if (urls.sparkSession.catalog.functionExists(
-          graft.functions.TilePairs.RobotsVerdictName))
-        call_function(graft.functions.TilePairs.RobotsVerdictName,
-          col("__g_target"), col("__g_rules"))
-      else
-        get(
-          filter(col("__g_rules"),
-            r => regexp_like(col("__g_target"), r.getField("pat"))),
-          lit(0)).getField("kr")
+    // per executor (a non-foldable regexp_like — see robotsVerdictFallback
+    // — pays Pattern.compile per row × rule: pure CPU burn at crawl scale
+    // on identical host-level patterns)
+    val verdict = call_function(graft.functions.TilePairs.RobotsVerdictName,
+      col("__g_target"), col("__g_rules"))
     keyed
       .join(applicable, col("__g_host") === col("__g_rh"), "left")
       .withColumn(outCol, coalesce(verdict === 0, lit(true)))
       .drop("__g_host", "__g_target", "__g_rh", "__g_rules")
   }
+
+  /** Pure-Column reference for the graft_robots_verdict kernel
+    * (FunctionsSpec pins bit-parity): the `kr` of the first
+    * precedence-sorted rule whose pattern matches `target`, NULL when
+    * none does. */
+  private[graft] def robotsVerdictFallback(target: Column, rules: Column): Column =
+    get(filter(rules, r => regexp_like(target, r.getField("pat"))), lit(0)).getField("kr")
 }

@@ -91,16 +91,14 @@ object Similarity {
   private[ops] def round9HalfUp(x: Double): Double =
     BigDecimal(x).setScale(9, BigDecimal.RoundingMode.HALF_UP).toDouble
 
-  /** Dot-product implementation for a given session: the codegen'd native
-    * graft_dot expression when GraftExtensions is installed (same fold
-    * order, bit-identical results), else the higher-order-function fold. */
-  private[ops] def dotFor(df: DataFrame): (Column, Column) => Column =
-    if (df.sparkSession.catalog.functionExists(graft.functions.TilePairs.DotName))
-      (a, b) => call_function(graft.functions.TilePairs.DotName, a, b)
-    else dot
+  /** [[dot]] through the codegen'd native graft_dot expression (same fold
+    * order, bit-identical results). */
+  private[ops] def graftDot(a: Column, b: Column): Column =
+    call_function(graft.functions.TilePairs.DotName, a, b)
 
-  private def cosineWith(d: (Column, Column) => Column)(a: Column, b: Column): Column =
-    d(a, b) / (sqrt(d(a, a)) * sqrt(d(b, b)))
+  /** [[cosine]] through [[graftDot]]. */
+  private def graftCosine(a: Column, b: Column): Column =
+    graftDot(a, b) / (sqrt(graftDot(a, a)) * sqrt(graftDot(b, b)))
 
   /** Exact brute-force cosine top-k against a broadcast-literal query vector.
     *
@@ -117,7 +115,7 @@ object Similarity {
       k: Int,
   ): DataFrame = {
     val q = typedLit(query)
-    df.select(col(idCol).as("id"), cosineWith(dotFor(df))(col(embCol), q).as("cos"))
+    df.select(col(idCol).as("id"), graftCosine(col(embCol), q).as("cos"))
       .orderBy(col("cos").desc, col("id").asc)
       .limit(k)
   }
@@ -142,7 +140,6 @@ object Similarity {
   ): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(k >= 1, "k must be >= 1")
-    val d = dotFor(corpus)
     // zero-norm vectors have no defined cosine, and NaN-/overflow-norm
     // vectors score NaN against everything; dropping both beats letting
     // NaN scores sort above every real neighbor (Spark ranks NaN first
@@ -151,14 +148,14 @@ object Similarity {
     // `<= MaxValue` leg is what actually rejects it)
     val q = broadcast(
       queries.select(col(qIdCol).as("query_id"), col(qEmbCol).as("qemb"))
-        .withColumn("qnrm", sqrt(d(col("qemb"), col("qemb"))))
+        .withColumn("qnrm", sqrt(graftDot(col("qemb"), col("qemb"))))
         .filter(col("qnrm") > 0.0 && col("qnrm") <= Double.MaxValue))
     val base = corpus.select(col(idCol).as("id"), col(embCol).as("emb"))
-      .withColumn("nrm", sqrt(d(col("emb"), col("emb"))))
+      .withColumn("nrm", sqrt(graftDot(col("emb"), col("emb"))))
       .filter(col("nrm") > 0.0 && col("nrm") <= Double.MaxValue)
     base.join(q)
       .select(col("query_id"), col("id"),
-        (d(col("emb"), col("qemb")) / (col("nrm") * col("qnrm"))).as("cos"))
+        (graftDot(col("emb"), col("qemb")) / (col("nrm") * col("qnrm"))).as("cos"))
       .withColumn("rn", row_number().over(
         Window.partitionBy("query_id").orderBy(col("cos").desc, col("id").asc)))
       .filter(col("rn") <= k)
@@ -181,12 +178,9 @@ object Similarity {
   /** Random-hyperplane (sign) LSH bucket id: bit p = 1 iff emb·planeₚ > 0.
     * Cosine-similar vectors collide with high probability. One projection,
     * no shuffle. */
-  def lshBucket(
-      emb: Column,
-      planes: Seq[Seq[Double]],
-      dotImpl: (Column, Column) => Column = dot): Column =
+  def lshBucket(emb: Column, planes: Seq[Seq[Double]]): Column =
     planes.zipWithIndex.map { case (p, i) =>
-      when(dotImpl(emb, typedLit(p)) > 0.0, lit(1L << i)).otherwise(lit(0L))
+      when(graftDot(emb, typedLit(p)) > 0.0, lit(1L << i)).otherwise(lit(0L))
     }.reduce(_ + _)
 
   /** Bucketed ANN top-k: prune to the query's bucket, then exact cosine
@@ -209,7 +203,7 @@ object Similarity {
       if (d > 0.0) 1L << i else 0L
     }.sum
     cosineTopK(
-      df.filter(lshBucket(col(embCol), planes, dotFor(df)) === queryBucket),
+      df.filter(lshBucket(col(embCol), planes) === queryBucket),
       idCol, embCol, query, k)
   }
 
@@ -246,11 +240,10 @@ object Similarity {
       if (inDim > 0) inDim
       else df.select(size(col(embCol))).head().getInt(0)
     val m = signProjectionMatrix(outDim, dim, seed)
-    val d = dotFor(df)
     val scale = math.sqrt(outDim.toDouble)
     val out = if (outCol.nonEmpty) outCol else s"${embCol}_rp"
     df.withColumn(out,
-      array(m.map(row => d(col(embCol), typedLit(row)) / lit(scale)): _*))
+      array(m.map(row => graftDot(col(embCol), typedLit(row)) / lit(scale)): _*))
   }
 
   // ─────────────────── embedding outliers ───────────────────
@@ -294,9 +287,8 @@ object Similarity {
   }
 
   /** Two aggregate passes, both O(corpus) with map-side partials: the mean
-    * vector via the graft_gram_sum moment buffer (posexplode means on
-    * vanilla sessions), then avg/stddev of each row's distance to it.
-    * Values are rounded to 1e-9 so independent fits of the same data agree
+    * vector via the graft_gram_sum moment buffer, then avg/stddev of each
+    * row's distance to it. Values are rounded to 1e-9 so independent fits of the same data agree
     * bit-for-bit (float partials merge in arrival order). */
   def embeddingOutlierStats(df: DataFrame, embCol: String, inDim: Int = -1): OutlierStats = {
     graft.core.Validators.requireColumns(df, Seq(embCol))
@@ -304,26 +296,13 @@ object Similarity {
       if (inDim > 0) inDim
       else df.select(size(col(embCol))).head().getInt(0)
     def round9(x: Double): Double = math.rint(x * 1e9) / 1e9
-    val mean: Seq[Double] =
-      if (df.sparkSession.catalog.functionExists(graft.functions.TilePairs.GramSumName) &&
-          !Dedup.ForceFallback) {
-        val stats = df.select(call_function(graft.functions.TilePairs.GramSumName,
-            col(embCol), lit(d)).as("s"))
-          .head().getSeq[Double](0)
-        val n = stats(0)
-        require(n >= 2.0, "embeddingOutlierStats needs at least 2 rows")
-        (0 until d).map(i => round9(stats(1 + i) / n))
-      } else {
-        // match the kernel's null semantics: only non-null vectors count
-        val nonNull = df.filter(col(embCol).isNotNull)
-        val n = nonNull.count().toDouble
-        require(n >= 2.0, "embeddingOutlierStats needs at least 2 rows")
-        nonNull.select(posexplode(col(embCol)).as(Seq("i", "x")))
-          .groupBy("i").agg(sum(col("x").cast("double")).as("s"))
-          .collect().map(r => r.getInt(0) -> round9(r.getDouble(1) / n))
-          .toMap.toSeq.sortBy(_._1).map(_._2)
-      }
-    val dist = sqrt(sqDistFor(df)(col(embCol), typedLit(mean)))
+    val stats = df.select(call_function(graft.functions.TilePairs.GramSumName,
+        col(embCol), lit(d)).as("s"))
+      .head().getSeq[Double](0)
+    val n = stats(0)
+    require(n >= 2.0, "embeddingOutlierStats needs at least 2 rows")
+    val mean = (0 until d).map(i => round9(stats(1 + i) / n))
+    val dist = sqrt(graftSqDist(col(embCol), typedLit(mean)))
     val r = df.select(avg(dist).as("m"), stddev_samp(dist).as("s")).head()
     OutlierStats(mean, round9(r.getDouble(0)), round9(r.getDouble(1)))
   }
@@ -342,7 +321,7 @@ object Similarity {
   ): DataFrame = {
     graft.core.Validators.requireColumns(df, Seq(idCol, embCol))
     val st = Option(stats).getOrElse(embeddingOutlierStats(df, embCol))
-    val dist = sqrt(sqDistFor(df)(col(embCol), typedLit(st.mean)))
+    val dist = sqrt(graftSqDist(col(embCol), typedLit(st.mean)))
     df.select(col(idCol).as("id"), dist.as("dist"))
       .withColumn("z", (col("dist") - lit(st.meanDist)) / lit(st.stdDist))
       .filter(col("z") > z)
@@ -355,13 +334,10 @@ object Similarity {
     * is stable across partial-aggregate merge orders and replays on other
     * engines.
     *
-    * Scale shape: with GraftExtensions installed, one hash aggregate whose
-    * per-(group, partition) partial is a single (1 + d)-double buffer
-    * (graft_vec_sum — map-side combine, no row explosion). The vanilla
-    * fallback posexplodes rows × d values through two hash aggregates and
-    * reassembles per group — same result, d× shuffle width. Ragged inputs
-    * (vectors of differing lengths) raise in the kernel path; the fallback
-    * averages per position, so validate upstream when lengths can vary. */
+    * Scale shape: one hash aggregate whose per-(group, partition) partial
+    * is a single (1 + d)-double buffer (graft_vec_sum — map-side combine,
+    * no row explosion). Ragged inputs (vectors of differing lengths)
+    * raise. */
   def groupCentroids(
       df: DataFrame,
       keyCol: String,
@@ -369,44 +345,27 @@ object Similarity {
       inDim: Int = -1,
   ): DataFrame = {
     graft.core.Validators.requireColumns(df, Seq(keyCol, embCol))
-    // dimension probe: only the kernel path needs d (one tiny job); empty /
-    // all-null input yields an empty result instead of a head() crash
-    lazy val probedDim: Option[Int] =
+    // dimension probe (one tiny job); empty / all-null input yields an
+    // empty result instead of a head() crash
+    val probedDim: Option[Int] =
       if (inDim > 0) Some(inDim)
       else df.filter(col(embCol).isNotNull).select(size(col(embCol)))
         .take(1).headOption.map(_.getInt(0))
-    if (df.sparkSession.catalog.functionExists(graft.functions.TilePairs.VecSumName) &&
-        !Dedup.ForceFallback) {
-      probedDim match {
-        case None => // no non-null vector anywhere → empty result, not a crash
-          df.select(col(keyCol)).limit(0)
-            .withColumn("centroid", typedLit(Seq.empty[Double]))
-            .withColumn("n_vectors", lit(0L))
-        case Some(d) =>
-          val n = element_at(col("__graft_vs"), 1)
-          df.groupBy(col(keyCol))
-            .agg(call_function(graft.functions.TilePairs.VecSumName,
-              col(embCol), lit(d)).as("__graft_vs"))
-            .filter(n > 0)
-            .select(
-              col(keyCol),
-              transform(slice(col("__graft_vs"), 2, d), x => round(x / n, 9)).as("centroid"),
-              n.cast("long").as("n_vectors"))
-      }
-    } else {
-      val nonNull = df.filter(col(embCol).isNotNull)
-      nonNull
-        .select(col(keyCol), posexplode(col(embCol)).as(Seq("__graft_i", "__graft_x")))
-        .groupBy(col(keyCol), col("__graft_i"))
-        .agg(sum(col("__graft_x").cast("double")).as("__graft_s"),
-          count(lit(1)).as("__graft_n"))
-        .groupBy(col(keyCol))
-        .agg(
-          transform(
-            array_sort(collect_list(struct(col("__graft_i"),
-              round(col("__graft_s") / col("__graft_n"), 9).as("__graft_m")))),
-            s => s("__graft_m")).as("centroid"),
-          max(col("__graft_n")).as("n_vectors"))
+    probedDim match {
+      case None => // no non-null vector anywhere → empty result, not a crash
+        df.select(col(keyCol)).limit(0)
+          .withColumn("centroid", typedLit(Seq.empty[Double]))
+          .withColumn("n_vectors", lit(0L))
+      case Some(d) =>
+        val n = element_at(col("__graft_vs"), 1)
+        df.groupBy(col(keyCol))
+          .agg(call_function(graft.functions.TilePairs.VecSumName,
+            col(embCol), lit(d)).as("__graft_vs"))
+          .filter(n > 0)
+          .select(
+            col(keyCol),
+            transform(slice(col("__graft_vs"), 2, d), x => round(x / n, 9)).as("centroid"),
+            n.cast("long").as("n_vectors"))
     }
   }
 
@@ -518,10 +477,8 @@ object Similarity {
   }
 
   /** Fit PCA over an embedding column: count/mean/Gram in ONE distributed
-    * aggregate (native graft_gram_sum buffer when installed; a d²-row
-    * posexplode formulation otherwise — correct but only sensible on small
-    * data), then covariance + Jacobi on the driver (d × d — independent of
-    * corpus size; at 100 TB the single moment pass IS the whole cost).
+    * aggregate (the native graft_gram_sum buffer), then covariance +
+    * Jacobi on the driver (d × d — independent of corpus size; at 100 TB the single moment pass IS the whole cost).
     *
     * Covariance entries are rounded to 1e-9 before the eigensolve so
     * run-to-run float-merge-order noise (partial aggregates combine in
@@ -535,35 +492,9 @@ object Similarity {
       if (inDim > 0) inDim
       else df.select(size(col(embCol))).head().getInt(0)
     require(k >= 1 && k <= d, s"k must be in [1, $d]")
-    val stats: Array[Double] =
-      if (df.sparkSession.catalog.functionExists(graft.functions.TilePairs.GramSumName) &&
-          !Dedup.ForceFallback) {
-        df.select(call_function(graft.functions.TilePairs.GramSumName,
-            col(embCol), lit(d)).as("s"))
-          .head().getSeq[Double](0).toArray
-      } else {
-        // d² exploded product rows per vector — the no-extensions fallback;
-        // null vectors excluded to match the kernel's skip-null semantics
-        val nonNull = df.filter(col(embCol).isNotNull)
-        val n = nonNull.count().toDouble
-        val sums = nonNull
-          .select(posexplode(col(embCol)).as(Seq("i", "x")))
-          .groupBy("i").agg(sum(col("x").cast("double")).as("s"))
-          .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
-        val gram = nonNull
-          .select(col(embCol).as("e"))
-          .select(posexplode(col("e")).as(Seq("i", "x")), col("e"))
-          .select(col("i"), col("x"), posexplode(col("e")).as(Seq("j", "y")))
-          .groupBy("i", "j")
-          .agg(sum(col("x").cast("double") * col("y").cast("double")).as("g"))
-          .collect().map(r => (r.getInt(0), r.getInt(1)) -> r.getDouble(2)).toMap
-        val out = new Array[Double](1 + d + d * d)
-        out(0) = n
-        for (i <- 0 until d) out(1 + i) = sums.getOrElse(i, 0.0)
-        for (i <- 0 until d; j <- 0 until d)
-          out(1 + d + i * d + j) = gram.getOrElse((i, j), 0.0)
-        out
-      }
+    val stats = df.select(call_function(graft.functions.TilePairs.GramSumName,
+        col(embCol), lit(d)).as("s"))
+      .head().getSeq[Double](0).toArray
     val n = stats(0)
     require(n >= 2.0, "pcaFit needs at least 2 rows")
     val mean = Array.tabulate(d)(i => stats(1 + i) / n)
@@ -598,11 +529,10 @@ object Similarity {
     if (whiten) require(model.eigenvalues.forall(_ > 0.0),
       "whiten requires strictly positive eigenvalues (a zero-variance " +
         "component cannot be scaled to unit variance)")
-    val dImpl = dotFor(df)
     val out = if (outCol.nonEmpty) outCol else s"${embCol}_pca"
     df.withColumn(out,
       array(model.components.indices.map { j =>
-        val y = dImpl(col(embCol), typedLit(model.components(j))) - lit(model.offsets(j))
+        val y = graftDot(col(embCol), typedLit(model.components(j))) - lit(model.offsets(j))
         if (whiten) y / lit(math.sqrt(model.eigenvalues(j))) else y
       }: _*))
   }
@@ -618,42 +548,26 @@ object Similarity {
       lit(0.0),
       (acc, v) => acc + v)
 
-  /** Squared L2 between two array COLUMNS — same sequential fold as
-    * [[sqDist]] (bit-identical when the right side is already double). */
-  def sqDistCols(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(a, b, (x, y) => {
-        val d = x.cast("double") - y.cast("double")
-        d * d
-      }),
-      lit(0.0),
-      (acc, v) => acc + v)
+  /** Squared L2 between two array COLUMNS through the native graft_sqdist
+    * expression — the same sequential fold as [[sqDist]] (codegen'd
+    * primitive loop). */
+  private def graftSqDist(a: Column, b: Column): Column =
+    call_function(graft.functions.TilePairs.SqDistName, a, b)
 
-  /** Column-column squared distance for a session: native graft_sqdist
-    * (codegen'd primitive loop, same fold order) when GraftExtensions is
-    * installed, else the higher-order-function fold. */
-  private def sqDistFor(df: DataFrame): (Column, Column) => Column =
-    if (df.sparkSession.catalog.functionExists(graft.functions.TilePairs.SqDistName))
-      (a, b) => call_function(graft.functions.TilePairs.SqDistName, a, b)
-    else sqDistCols
-
-  /** Above nlist × dim literal doubles, centroid sets stop riding as plan
-    * literals and become a broadcast centroid TABLE (see [[assignCells]]).
+  /** Above nlist × dim literal doubles, the probe-side cell ranking of
+    * [[ivfTopK]] (an nlist-wide struct-array expression tree) stops
+    * riding as a plan literal and becomes a broadcast centroid TABLE.
     * A var so tests can force either path. */
   var LiteralAssignMax: Int = 4096
 
-  /** Higher literal-mode cap when the native argmin kernel is installed:
-    * there the centroids are ONE constant ArrayData referenced by a single
-    * expression (not an nlist-wide struct-array tree), so the only literal
-    * cost is the ~8·nlist·dim bytes it adds to the serialized stage — 1 M
-    * doubles ≈ 8 MB, past which the broadcast table wins. A var so tests
-    * can force the join path. */
+  /** Literal-mode cap of the native argmin assignment ([[assignCells]],
+    * the Lloyd iterations): the centroids are ONE constant ArrayData
+    * referenced by a single expression, so the only literal cost is the
+    * ~8·nlist·dim bytes it adds to the serialized stage — 1 M doubles ≈
+    * 8 MB, past which the broadcast table wins. A var so tests can force
+    * the join path. */
   var NativeLiteralAssignMax: Int = 1 << 20
 
-  /** Literal-mode assignment is sound when the plan-literal stays small —
-    * the threshold depends on whether the native kernel (single constant)
-    * or the HOF struct-array tree (nlist × dim expression nodes) would
-    * carry it. */
   /** The `nlist = 0` auto-sizing rule: round(√N) clamped to [8, 65536].
     * √N is the standard IVF balance point — the cell-tiled pair stages
     * ([[knnGraph]]/[[hardNegatives]]/[[semanticDedup]]) are O(N²/nlist)
@@ -664,16 +578,13 @@ object Similarity {
   private[graft] def autoNlist(n: Long): Int =
     math.max(8L, math.min(65536L, math.round(math.sqrt(n.toDouble)))).toInt
 
-  private def literalAssignOk(df: DataFrame, nlist: Int, dims: Int): Boolean = {
-    val sz = nlist.toLong * dims
-    sz <= LiteralAssignMax ||
-      (sz <= NativeLiteralAssignMax &&
-        df.sparkSession.catalog.functionExists(graft.functions.TilePairs.IvfCellName))
-  }
+  /** Literal-mode assignment is sound while the plan literal stays small. */
+  private def literalAssignOk(nlist: Int, dims: Int): Boolean =
+    nlist.toLong * dims <= NativeLiteralAssignMax
 
   /** Nearest-centroid assignment for every row: returns (id, emb, cell).
     *
-    * Small centroid sets (nlist × dim ≤ [[LiteralAssignMax]]) are a single
+    * Small centroid sets (nlist × dim ≤ [[NativeLiteralAssignMax]]) are a single
     * narrow projection with the centroids as plan literals. Large sets ride
     * as a BROADCAST centroid table instead — a giant literal bloats every
     * serialized plan and the per-row argmin expression tree — joined on a
@@ -688,8 +599,8 @@ object Similarity {
       forceBroadcast: Boolean = false,
   ): DataFrame = {
     val base = df.select(col(idCol).as("id"), col(embCol).as("emb"))
-    if (!forceBroadcast && literalAssignOk(df, centroids.length, centroids.head.length))
-      base.withColumn("cell", ivfCellFor(df)(col("emb"), centroids))
+    if (!forceBroadcast && literalAssignOk(centroids.length, centroids.head.length))
+      base.withColumn("cell", graftIvfCell(col("emb"), centroids))
     else {
       val spark = df.sparkSession
       import spark.implicits._
@@ -701,7 +612,6 @@ object Similarity {
       val centDf = centroids.zipWithIndex.map { case (c, i) => (i, c) }
         .toDF("cell", "c")
         .withColumn("__j", pmod(col("cell").cast("long"), lit(1L)))
-      val sq = sqDistFor(df)
       // The argmin aggregate sees only (id, emb-hash, dc) — carrying the
       // embedding through the nlist-wide fan-out would put a dim-float
       // array on every row × centroid intermediate; the winning cell joins
@@ -714,7 +624,7 @@ object Similarity {
         .withColumn("__j", pmod(col("__eh"), lit(1L)))
         .join(broadcast(centDf), "__j") // bounded: nlist rows by construction
         .select(col("id"), col("__eh"),
-          struct(sq(col("emb"), col("c")).as("d"), col("cell")).as("dc"))
+          struct(graftSqDist(col("emb"), col("c")).as("d"), col("cell")).as("dc"))
         .groupBy("id", "__eh")
         .agg(min(col("dc")).getField("cell").as("cell"))
       base.withColumn("__eh", xxhash64(col("emb")))
@@ -825,7 +735,7 @@ object Similarity {
         .toSeq
       require(cents.nonEmpty, "ivfCentroids: no embeddings to train on")
       val dims = cents.head.length
-      val literalMode = literalAssignOk(df, k, dims)
+      val literalMode = literalAssignOk(k, dims)
       // Join-mode Lloyd runs over DISTINCT embeddings with multiplicity
       // weights and a LONG surrogate key: grouping the post-join argmin by
       // the embedding array itself forces sort-based aggregation with
@@ -855,7 +765,7 @@ object Similarity {
             // the nlist × dim argmin once per exploded POSITION (dim× the
             // work — measured 32 s instead of ~2 s at 256 × 64 over sf0.1).
             train
-              .select(ivfCellFor(train)(col("e"), cents).as("cell"), col("e"))
+              .select(graftIvfCell(col("e"), cents).as("cell"), col("e"))
               .select(col("cell"), posexplode(col("e")).as(Seq("pos", "v")))
               .groupBy("cell", "pos")
               .agg(avg(col("v").cast("double")).as("m"))
@@ -865,12 +775,11 @@ object Similarity {
             val centDf = cents.zipWithIndex.map { case (c, i) => (i, c) }
               .toDF("cell", "c")
               .withColumn("__j", pmod(col("cell").cast("long"), lit(1L)))
-            val sq = sqDistFor(train)
             weighted
               .withColumn("__j", pmod(col("rid"), lit(1L)))
               .join(broadcast(centDf), "__j")
               .select(col("rid"), col("e"), col("w"),
-                struct(sq(col("e"), col("c")).as("d"), col("cell")).as("dc"))
+                struct(graftSqDist(col("e"), col("c")).as("d"), col("cell")).as("dc"))
               .groupBy("rid")
               .agg(first(col("e")).as("e"), first(col("w")).as("w"),
                 min(col("dc")).getField("cell").as("cell"))
@@ -901,8 +810,10 @@ object Similarity {
 
   /** Nearest-centroid cell id (ties by cell id): the argmin over per-cell
     * squared distances, selected via a sorted struct array — one projection,
-    * no shuffle, no UDF. */
-  def ivfCell(e: Column, centroids: Seq[Seq[Double]]): Column = {
+    * no shuffle, no UDF. Pure-Column reference for the graft_ivf_cell
+    * kernel (FunctionsSpec pins bit-parity); the operators call
+    * [[graftIvfCell]]. */
+  private[graft] def ivfCell(e: Column, centroids: Seq[Seq[Double]]): Column = {
     val cands = array(centroids.zipWithIndex.map { case (c, i) =>
       struct(sqDist(e, c).as("d"), lit(i).as("cell"))
     }: _*)
@@ -910,12 +821,10 @@ object Similarity {
   }
 
   /** [[ivfCell]] through the native argmin kernel (bit-identical fold order
-    * and tie-breaking) when GraftExtensions is installed. */
-  private def ivfCellFor(df: DataFrame)(e: Column, centroids: Seq[Seq[Double]]): Column =
-    if (df.sparkSession.catalog.functionExists(graft.functions.TilePairs.IvfCellName))
-      call_function(graft.functions.TilePairs.IvfCellName, e,
-        typedLit(centroids.flatten), lit(centroids.head.length))
-    else ivfCell(e, centroids)
+    * and tie-breaking). */
+  private def graftIvfCell(e: Column, centroids: Seq[Seq[Double]]): Column =
+    call_function(graft.functions.TilePairs.IvfCellName, e,
+      typedLit(centroids.flatten), lit(centroids.head.length))
 
   /** IVF top-k: assign every vector to its nearest centroid cell, probe the
     * `nprobe` cells nearest the query, exact cosine top-k within them. The
@@ -992,13 +901,12 @@ object Similarity {
       val centDf = cents.zipWithIndex.map { case (c, i) => (i, c) }
         .toDF("cell", "c")
         .withColumn("__j", pmod(col("cell").cast("long"), lit(1L)))
-      val sq = sqDistFor(q)
       q.withColumn("__eh", xxhash64(col("qemb")))
         .withColumn("__j", pmod(col("__eh"), lit(1L)))
         .join(broadcast(centDf), "__j") // bounded: nlist rows by construction
         .withColumn("__rn", row_number().over(
           Window.partitionBy(col("__eh"), col("query_id"))
-            .orderBy(sq(col("qemb"), col("c")), col("cell"))))
+            .orderBy(graftSqDist(col("qemb"), col("c")), col("cell"))))
         .filter(col("__rn") <= nprobe)
         .drop("__j", "__eh", "__rn", "c")
     }
@@ -1044,7 +952,6 @@ object Similarity {
     require(nprobe >= 1, "nprobe must be >= 1")
     require(model.centroids.nonEmpty, "model must have at least one centroid")
     val cents = model.centroids
-    val d = dotFor(corpus)
     val q = broadcast(probeCells(
       queries.select(col(qIdCol).as("query_id"), col(qEmbCol).as("qemb"))
         // exact-duplicate rows collapse HERE, deterministically (the key is
@@ -1052,15 +959,15 @@ object Similarity {
         // fan-out (two copies share one rank window) and double the
         // literal-path candidate stream
         .dropDuplicates("query_id", "qemb")
-        .withColumn("qnrm", sqrt(d(col("qemb"), col("qemb"))))
+        .withColumn("qnrm", sqrt(graftDot(col("qemb"), col("qemb"))))
         .filter(col("qnrm") > 0.0 && col("qnrm") <= Double.MaxValue),
       cents, nprobe, forceBroadcastAssign))
     val base = assignCells(corpus, idCol, embCol, cents, forceBroadcastAssign)
-      .withColumn("nrm", sqrt(d(col("emb"), col("emb"))))
+      .withColumn("nrm", sqrt(graftDot(col("emb"), col("emb"))))
       .filter(col("nrm") > 0.0 && col("nrm") <= Double.MaxValue)
     base.join(q, "cell")
       .select(col("query_id"), col("id"),
-        (d(col("emb"), col("qemb")) / (col("nrm") * col("qnrm"))).as("cos"))
+        (graftDot(col("emb"), col("qemb")) / (col("nrm") * col("qnrm"))).as("cos"))
       .withColumn("rn", row_number().over(
         Window.partitionBy("query_id").orderBy(col("cos").desc, col("id").asc)))
       .filter(col("rn") <= k)
@@ -1122,7 +1029,6 @@ object Similarity {
       ref: DataFrame, cur: DataFrame, embCol: String): DataFrame = {
     graft.core.Validators.requireColumns(ref, Seq(embCol))
     graft.core.Validators.requireColumns(cur, Seq(embCol))
-    val d = dotFor(ref)
     def side(df: DataFrame, name: String): (Seq[Double], Long, Double) = {
       val c = groupCentroids(df.withColumn("__graft_one", lit(1)), "__graft_one", embCol)
         .select("centroid", "n_vectors").collect()
@@ -1131,7 +1037,7 @@ object Similarity {
           s"embeddingDriftStats: the $name drop has no vectors — " +
             "a centroid of nothing is not evidence of no drift")
       val normRow = df.filter(col(embCol).isNotNull)
-        .agg(round(avg(sqrt(d(col(embCol), col(embCol)))), 9)).head()
+        .agg(round(avg(sqrt(graftDot(col(embCol), col(embCol)))), 9)).head()
       (c.head.getSeq[Double](0).toSeq, c.head.getLong(1), normRow.getDouble(0))
     }
     val (rm, rn, rNorm) = side(ref, "reference")
@@ -1393,7 +1299,7 @@ object Similarity {
 
   /** PQ-encode every vector: per subspace, the nearest codeword's index
     * (squared L2 argmin, ties to the lower index — [[ivfCell]]'s rule,
-    * native kernel per subspace when installed). Output (id, codes) with
+    * native kernel per subspace). Output (id, codes) with
     * `codes` an m-element int array — the persisted 8-to-32×-smaller form.
     * One narrow projection, no shuffle, no join (codebooks are plan
     * literals: m × k × dsub = the model itself, dictionary-sized). */
@@ -1406,7 +1312,7 @@ object Similarity {
     require(model.m >= 1, "model must have at least one codebook")
     val dsub = model.dsub
     val codes = array(model.codebooks.zipWithIndex.map { case (cb, j) =>
-      ivfCellFor(df)(slice(col(embCol), j * dsub + 1, dsub), cb)
+      graftIvfCell(slice(col(embCol), j * dsub + 1, dsub), cb)
     }: _*)
     df.select(col(idCol).as("id"), codes.as("codes"))
   }
@@ -1477,7 +1383,7 @@ object Similarity {
     val res = withResiduals(df, idCol, embCol, coarse, forceBroadcastAssign)
     val dsub = pq.dsub
     val codes = array(pq.codebooks.zipWithIndex.map { case (cb, j) =>
-      ivfCellFor(df)(slice(col("__graft_r"), j * dsub + 1, dsub), cb)
+      graftIvfCell(slice(col("__graft_r"), j * dsub + 1, dsub), cb)
     }: _*)
     res.select(col("id"), col("cell"), codes.as("codes"))
   }
@@ -1568,14 +1474,13 @@ object Similarity {
     *     duplication is [[graft.ops.Dedup.exact]]'s job, and even tiled its
     *     k² cost is not worth paying here. Drops are counted and WARNed
     *     (see [[BucketCap]]); strict mode throws instead.
-    *   - Cosine is evaluated INLINE during tile expansion (native
-    *     graft_cosine_tile_pairs kernel when GraftExtensions is installed;
-    *     bit-identical HOF fold otherwise) — sub-threshold pairs are never
+    *   - Cosine is evaluated INLINE during tile expansion (the native
+    *     graft_cosine_tile_pairs kernel) — sub-threshold pairs are never
     *     materialized or shuffled. Norms are computed once per member at
     *     bucketing time, not per pair.
     *   - Rows with a NULL id or a zero/non-finite norm emit no pairs
     *     (no defined identity / no defined cosine — see the in-body
-    *     comment for the NaN path-divergence rationale).
+    *     comment).
     */
   /** The tile kernels carry LONG member ids. Integral id types cast
     * losslessly; anything else (string ids, decimals…) rides a 64-bit
@@ -1607,40 +1512,32 @@ object Similarity {
     val idType = df.schema(idCol).dataType
     val (sidOf, integralId) = tileIdFn(idType)
     val sid: Column = sidOf(col(idCol))
-    val d = dotFor(df)
     // band 0 uses `seed` itself; further bands mix in a fixed odd prime
     val bands = array((0 until numBands).map { b =>
       val planes = hyperplanes(numPlanes, dim, seed + 7919L * b)
-      struct(lit(b).as("band"), lshBucket(col("emb"), planes, d).as("h"))
+      struct(lit(b).as("band"), lshBucket(col("emb"), planes).as("h"))
     }: _*)
-    // Rows that cannot be paired meaningfully emit no pairs on either
-    // evaluation path:
+    // Rows that cannot be paired meaningfully emit no pairs:
     //  - NULL ids: the tile kernel would read a null long field as 0 (a
     //    false pair attributed to the real id 0) and xxhash64 collapses
     //    every NULL onto one surrogate;
     //  - non-positive or non-finite norms (all-zero, NaN-component, or
-    //    overflowing embeddings): their cosine is 0/0 or ∞/∞, and the two
-    //    paths disagree on NaN (Spark SQL sorts NaN above every double so
-    //    `NaN >= t` is TRUE; the kernel's JVM primitive compare says
-    //    FALSE). `norm <= MaxValue` rejects both NaN (sorts greatest) and
-    //    +Infinity in one predicate.
+    //    overflowing embeddings): their cosine is 0/0 or ∞/∞, undefined.
+    //    `norm <= MaxValue` rejects both NaN (Spark SQL sorts it greatest)
+    //    and +Infinity in one predicate.
     val buckets = BucketCap.capped(
       df
         .filter(col(idCol).isNotNull)
         .select(sid.as("id"), col(embCol).as("emb"))
-        .withColumn("norm", sqrt(d(col("emb"), col("emb"))))
+        .withColumn("norm", sqrt(graftDot(col("emb"), col("emb"))))
         .filter(col("norm") > 0.0 && col("norm") <= Double.MaxValue)
         .select(col("id"), col("emb"), col("norm"), explode(bands).as("bh"))
         .groupBy(col("bh.band").as("band"), col("bh.h").as("h"))
         .agg(sort_array(collect_list(struct(col("id"), col("emb"), col("norm")))).as("xs")),
       maxBucketSize, "cosineNearDupPairs")
-    val cosPair: (Column, Column) => Column = (x, y) =>
-      dot(x("emb"), y("emb")) / (x("norm") * y("norm"))
     val pairs = Dedup.expandSymmetricBuckets(
       buckets, Seq(col("band"), col("h")),
-      graft.functions.TilePairs.CosineName, lit(threshold),
-      (x, y) => cosPair(x, y) >= threshold,
-      (x, y) => struct(x("id").as("a"), y("id").as("b"), cosPair(x, y).as("cos")))
+      graft.functions.TilePairs.CosineName, lit(threshold))
     if (integralId)
       pairs.select(
         col("p.a").cast(idType).as("id_a"),
@@ -1683,9 +1580,8 @@ object Similarity {
       idCol, embCol, model.centroids, forceBroadcastAssign)
     val centDf = model.centroids.zipWithIndex.map { case (c, i) => (i, c) }
       .toDF("cell", "c")
-    val sq = sqDistFor(df)
     assigned.join(broadcast(centDf), "cell")
-      .select(col("cell"), sq(col("emb"), col("c")).as("d"))
+      .select(col("cell"), graftSqDist(col("emb"), col("c")).as("d"))
       .groupBy("cell")
       .agg(
         count(lit(1)).as("n_vectors"),
@@ -1706,8 +1602,8 @@ object Similarity {
     * DIFFERENT cell for it) are dropped.
     *
     * Scale shape: when the centroid set rides as a plan literal/constant
-    * (the common case — [[literalAssignOk]], up to ~1M doubles with the
-    * native kernel) the assignment is a narrow projection on the
+    * (the common case — [[literalAssignOk]], up to ~1M doubles) the
+    * assignment is a narrow projection on the
     * FULL-WIDTH rows and the per-cell quota is one rank window that
     * WindowGroupLimit prunes to perCell rows per task map-side before the
     * single shuffle on cell. Giant-model fallback: slim (id, emb)
@@ -1734,8 +1630,8 @@ object Similarity {
     val base = df.filter(col(idCol).isNotNull && col(embCol).isNotNull)
     val quota = Window.partitionBy(col("cell"))
       .orderBy(graft.ops.Sampling.minstdHash(col(idCol)).asc, col(idCol).asc)
-    if (!forceBroadcastAssign && literalAssignOk(df, cents.length, cents.head.length))
-      base.withColumn("cell", ivfCellFor(df)(col(embCol), cents))
+    if (!forceBroadcastAssign && literalAssignOk(cents.length, cents.head.length))
+      base.withColumn("cell", graftIvfCell(col(embCol), cents))
         .withColumn("__graft_rn", row_number().over(quota))
         .filter(col("__graft_rn") <= perCell)
         .drop("__graft_rn")
@@ -1758,9 +1654,8 @@ object Similarity {
     * silently diverge — the [[tileIdFn]] rationale): excludes rows that
     * cannot be paired (NULL ids — the tile kernel reads a null long as 0
     * and xxhash64 collapses every NULL onto one surrogate; non-positive/
-    * non-finite squared norms — cosine is 0/0 or ∞/∞ and the native vs
-    * HOF paths disagree on NaN, `<= MaxValue` rejects NaN and +Infinity
-    * in one predicate), assigns the survivors to cells, and collects each
+    * non-finite squared norms — cosine is 0/0 or ∞/∞, undefined;
+    * `<= MaxValue` rejects NaN and +Infinity in one predicate), assigns the survivors to cells, and collects each
     * cell's sorted (id = surrogate, emb, norm) member array through
     * [[BucketCap]] under the caller's op name. */
   private def cellPairBuckets(
@@ -1773,10 +1668,9 @@ object Similarity {
       forceBroadcastAssign: Boolean,
   ): DataFrame = {
     val (sidOf, _) = tileIdFn(df.schema(idCol).dataType)
-    val d = dotFor(df)
     val comparable = df
       .filter(col(idCol).isNotNull)
-      .withColumn("__graft_n2", d(col(embCol), col(embCol)))
+      .withColumn("__graft_n2", graftDot(col(embCol), col(embCol)))
       .filter(col("__graft_n2") > 0.0 && col("__graft_n2") <= Double.MaxValue)
       .drop("__graft_n2")
     val assigned = assignCells(
@@ -1784,7 +1678,7 @@ object Similarity {
     BucketCap.capped(
       assigned
         .select(sidOf(col("id")).as("sid"), col("emb"), col("cell"))
-        .withColumn("norm", sqrt(d(col("emb"), col("emb"))))
+        .withColumn("norm", sqrt(graftDot(col("emb"), col("emb"))))
         .groupBy(col("cell"))
         .agg(sort_array(collect_list(
           struct(col("sid").as("id"), col("emb"), col("norm")))).as("xs")),
@@ -1843,14 +1737,10 @@ object Similarity {
   ): DataFrame = {
     val buckets = cellPairBuckets(
       df, idCol, embCol, model, maxClusterSize, opName, forceBroadcastAssign)
-    val cosPair: (Column, Column) => Column = (x, y) =>
-      dot(x("emb"), y("emb")) / (x("norm") * y("norm"))
     val pairs = Dedup.materializeLazy(
       Dedup.expandSymmetricBuckets(
         buckets, Seq(col("cell")),
-        graft.functions.TilePairs.CosineName, lit(minCosine),
-        (x, y) => cosPair(x, y) >= minCosine,
-        (x, y) => struct(x("id").as("a"), y("id").as("b"), cosPair(x, y).as("cos")))
+        graft.functions.TilePairs.CosineName, lit(minCosine))
         .filter(col("p.a") =!= col("p.b"))
         .select(col("p.a").as("a"), col("p.b").as("b"), col("p.cos").as("cos")))
     pairs.select(col("a").as("src"), col("b").as("dst"), col("cos"))
@@ -2007,8 +1897,6 @@ object Similarity {
     val buckets = cellPairBuckets(
       df, idCol, embCol, model, maxClusterSize, "semanticDedup",
       forceBroadcastAssign)
-    val cosPair: (Column, Column) => Column = (x, y) =>
-      dot(x("emb"), y("emb")) / (x("norm") * y("norm"))
     // pairs arrive (a, b) with a <= b in sid order; the strict b side is
     // exactly the "has an EARLIER near neighbor" drop set. a = b happens
     // when two rows share an id (order-peers: neither is earlier) — such
@@ -2017,9 +1905,7 @@ object Similarity {
     // [[graft.ops.Dedup.exact]]'s job.
     val dropped = Dedup.expandSymmetricBuckets(
       buckets, Seq(col("cell")),
-      graft.functions.TilePairs.CosineName, lit(threshold),
-      (x, y) => cosPair(x, y) >= threshold,
-      (x, y) => struct(x("id").as("a"), y("id").as("b"), cosPair(x, y).as("cos")))
+      graft.functions.TilePairs.CosineName, lit(threshold))
       .filter(col("p.a") =!= col("p.b"))
       .select(col("p.b").as("__graft_drop_sid")).distinct()
     df.join(dropped, sidOf(col(idCol)) === col("__graft_drop_sid"), "left_anti")
@@ -2072,7 +1958,7 @@ object Similarity {
     assignCells(df, idCol, embCol, model.centroids, forceBroadcastAssign)
       .join(centDf, "cell")
       .select(col("id"), col("cell"),
-        round(cosineWith(dotFor(df))(col("emb"), col("__graft_c")), 9).as("proto"))
+        round(graftCosine(col("emb"), col("__graft_c")), 9).as("proto"))
   }
 
   /** Per-cluster prototypicality pruning (D4's second stage): within each

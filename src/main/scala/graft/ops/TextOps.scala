@@ -181,9 +181,7 @@ object TextOps {
     * fingerprinting, or dedup so visually-identical byte sequences
     * (precomposed é vs e + combining accent, NFKC-folded ligatures and
     * width variants) collide. Normalization runs in the native
-    * graft_normalize expression (Spark has no builtin; there is no
-    * pure-Column fallback, so this op requires GraftExtensions and says so
-    * loudly); lowercasing and whitespace collapsing compose on top as
+    * graft_normalize expression (Spark has no builtin); lowercasing and whitespace collapsing compose on top as
     * ordinary codegen'd expressions. In-place replacement of `textCol`;
     * one narrow projection, no shuffle. */
   def normalizeText(
@@ -197,10 +195,6 @@ object TextOps {
     graft.core.Validators.requireColumns(df, Seq(textCol))
     require(Set("NFC", "NFD", "NFKC", "NFKD")(form.toUpperCase(java.util.Locale.ROOT)),
       s"unknown normalization form '$form'")
-    if (!df.sparkSession.catalog.functionExists(graft.functions.TilePairs.NormalizeName))
-      throw graft.errors.FeatureFactoryException.InvalidParameter(
-        "normalizeText requires graft.functions.GraftExtensions on the session " +
-          "(spark.sql.extensions=graft.functions.GraftExtensions)")
     var c: Column = call_function(graft.functions.TilePairs.NormalizeName,
       col(textCol), lit(form), lit(stripAccents))
     if (lowercase) c = lower(c)
@@ -365,22 +359,20 @@ object TextOps {
     * Per-row expressions (the per-doc mode runs O(|distinct| × |tokens|)
     * inside one projection — no shuffle, no UDF), exact integer-count
     * divisions so any engine reproduces the doubles bit-for-bit. */
-  def repetitionFeatures(df: DataFrame, textCol: String): DataFrame =
-    if (!Dedup.ForceFallback &&
-        df.sparkSession.catalog.functionExists(graft.functions.TilePairs.RepetitionName)) {
-      // Native one-pass kernel (bit-identical): the HOF fallback below walks
-      // the token array through four interpreted expression trees per row —
-      // measured ~5 s over the sf0.1 corpus vs ~0.2 s for the kernel.
-      val rep = call_function(graft.functions.TilePairs.RepetitionName, col(textCol))
-      df.withColumn("__graft_rep", rep)
-        .withColumn("rep_dup_word_frac", col("__graft_rep.dup_word_frac"))
-        .withColumn("rep_top_word_frac", col("__graft_rep.top_word_frac"))
-        .withColumn("rep_top_bigram_frac", col("__graft_rep.top_bigram_frac"))
-        .drop("__graft_rep")
-    } else repetitionFeaturesFallback(df, textCol)
+  def repetitionFeatures(df: DataFrame, textCol: String): DataFrame = {
+    // Native one-pass kernel: the pure-Column twin below walks the token
+    // array through four interpreted expression trees per row — measured
+    // ~5 s over the sf0.1 corpus vs ~0.2 s for the kernel.
+    val rep = call_function(graft.functions.TilePairs.RepetitionName, col(textCol))
+    df.withColumn("__graft_rep", rep)
+      .withColumn("rep_dup_word_frac", col("__graft_rep.dup_word_frac"))
+      .withColumn("rep_top_word_frac", col("__graft_rep.top_word_frac"))
+      .withColumn("rep_top_bigram_frac", col("__graft_rep.top_bigram_frac"))
+      .drop("__graft_rep")
+  }
 
-  /** Pure-Column formulation of [[repetitionFeatures]] (vanilla sessions /
-    * `Dedup.ForceFallback` cross-checks). */
+  /** Pure-Column reference for [[repetitionFeatures]] (OpsSpec pins
+    * bit-parity with the kernel). */
   private[graft] def repetitionFeaturesFallback(df: DataFrame, textCol: String): DataFrame = {
     def toks = tokens(lower(col(textCol)))
     def topShare(arr: Column): Column = {
@@ -935,11 +927,7 @@ object TextOps {
     * sort, scales like any word-count. */
   def topNgrams(df: org.apache.spark.sql.DataFrame, textCol: String, n: Int, k: Int)
       : org.apache.spark.sql.DataFrame = {
-    val grams =
-      if (df.sparkSession.catalog.functionExists(
-        graft.functions.TilePairs.ShingleStrName))
-        call_function(graft.functions.TilePairs.ShingleStrName, col(textCol), lit(n))
-      else Dedup.shingles(col(textCol), n)
+    val grams = call_function(graft.functions.TilePairs.ShingleStrName, col(textCol), lit(n))
     df.select(explode(grams).as("gram"))
       .groupBy("gram")
       .agg(count(lit(1)).as("doc_freq"))

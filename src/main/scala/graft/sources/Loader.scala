@@ -17,6 +17,73 @@ import graft.errors.FeatureFactoryException.UnsupportedFormat
   * variants route on the inner extension (`docs.jsonl.gz`). */
 object Loader {
 
+  /** Floor task size for COLUMNAR work (plain filter/join/aggregate):
+    * ~4 MB of scanned bytes, the guide-§2.1 "partitions in the
+    * 100 MB—1 GB raw / few-MB compressed" sizing. */
+  private[graft] val ColumnarBytesPerTask: Long = 4L << 20
+
+  /** Floor task size for per-row KERNEL work (tokenize, BPE merge chains,
+    * Viterbi, regex+JSON line parses) whose per-row cost is ~10³× a
+    * columnar filter: ~16 KB of scanned bytes per task. */
+  private[graft] val KernelBytesPerTask: Long = 16L << 10
+
+  /** Scan metadata — planned scan partition count + estimated scanned
+    * bytes (file-source stats = total file size) — cached per (format,
+    * path, session cores, total file length, latest file mtime). Planning
+    * the bare scan (`toRdd`) on every read cost dozens of plannings per
+    * query build; the cache makes the floor decision one map lookup per
+    * read after the first. The length and mtime come from the listing the
+    * read already did, so a table rewritten in-process gets a fresh
+    * entry instead of the old file's decision. */
+  private val scanMeta =
+    scala.collection.concurrent.TrieMap.empty[(String, String, Int, Long, Long), (Int, Long)]
+
+  /** (total length, latest modification time) of the files a file-source
+    * frame reads. */
+  private def fileIdentity(df: DataFrame): (Long, Long) = {
+    import org.apache.spark.sql.execution.datasources.{
+      HadoopFsRelation, LogicalRelation, PartitioningAwareFileIndex}
+    val files = df.queryExecution.analyzed.collect { case l: LogicalRelation => l.relation }
+      .collect { case HadoopFsRelation(index: PartitioningAwareFileIndex, _, _, _, _, _) =>
+        index.allFiles()
+      }.flatten
+    (files.map(_.getLen).sum, files.map(_.getModificationTime).foldLeft(0L)(math.max(_, _)))
+  }
+
+  /** Reads `path` in `format` with a COST-AWARE scan-parallelism floor
+    * (optimization guide §2.1/§2.5): repartition the just-read frame only
+    * when BOTH hold —
+    *  (a) the planned scan has fewer partitions than the session's
+    *      default parallelism (single-file / single-row-group inputs:
+    *      physically unsplittable, every downstream per-row kernel runs
+    *      in ONE task however many cores the session has), AND
+    *  (b) the scanned bytes justify the extra Exchange: the floor target
+    *      is `min(cores, ceil(bytes / bytesPerTask))`, so a table smaller
+    *      than `bytesPerTask` NEVER shuffles — flooring every read to
+    *      `defaultParallelism` unconditionally made 16 light queries
+    *      0.45–0.89× slower from 32-way shuffles of dictionary-sized
+    *      tables (pure per-task scheduling overhead).
+    * At production scale (many files / row groups ≥ cores) condition (a)
+    * is false and NO shuffle is added — the floor derives from input
+    * layout + bytes + session cores, never a local constant. Catalyst
+    * pushes filters and projections below Repartition, so query-side
+    * predicates still reach the scan under the floor. `bytesPerTask` is
+    * [[ColumnarBytesPerTask]] or [[KernelBytesPerTask]]. */
+  private[graft] def flooredScan(
+      s: SparkSession, format: String, path: String, bytesPerTask: Long): DataFrame = {
+    val df = s.read.format(format).load(path)
+    val cores = s.sparkContext.defaultParallelism
+    val (length, mtime) = fileIdentity(df)
+    val (parts, bytes) = scanMeta.getOrElseUpdate((format, path, cores, length, mtime), {
+      val probe = s.read.format(format).load(path)
+      (probe.queryExecution.toRdd.getNumPartitions,
+        probe.queryExecution.optimizedPlan.stats.sizeInBytes.min(BigInt(Long.MaxValue)).toLong)
+    })
+    val target = math.min(cores.toLong,
+      math.max(1L, (bytes + bytesPerTask - 1) / bytesPerTask)).toInt
+    if (parts < target) df.repartition(target) else df
+  }
+
   def load(spark: SparkSession, path: String): DataFrame = {
     // strip a trailing compression suffix so `docs.jsonl.gz` routes as jsonl
     // (Spark's readers handle the codec themselves; loadWarc inflates its
@@ -110,29 +177,6 @@ object Loader {
     * since urlkey-sorted index files sort captures by domain, a
     * min/max-pruning format upgrade (parquet-backed index) keeps the
     * same column contract. */
-  /** Scan-parallelism floor (optimization guide §2.1/§2.5; the
-    * [[graft.SparkEntry]] rtKernel rule): a small index file is ONE text
-    * split, so the whole pipeline above it — line parse, from_json,
-    * broadcast-join probe, map-side window limits — runs in one task
-    * however many cores the session has. COST-AWARE since round 16: the
-    * floor target is `min(cores, ceil(bytes / bytesPerTask))` with the
-    * kernel sizing (~16 KB of raw index lines per task ≈ a few hundred
-    * regex+JSON parses ≈ tens of ms), so a dictionary-sized file never
-    * shuffles; at production scale (≥ cores splits) the planned-partition
-    * condition is false and no shuffle is added. */
-  private def floorParallelism(df: DataFrame): DataFrame = {
-    val s = df.sparkSession
-    val p = s.sparkContext.defaultParallelism
-    val bytesPerTask = s.conf.getOption("graft.kernelScan.floorBytesPerTask")
-      .map(_.toLong).getOrElse(16L << 10)
-    val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-      .min(BigInt(Long.MaxValue)).toLong
-    val target = math.min(p.toLong,
-      math.max(1L, (bytes + bytesPerTask - 1) / bytesPerTask)).toInt
-    if (df.queryExecution.toRdd.getNumPartitions < target) df.repartition(target)
-    else df
-  }
-
   def loadCdxj(spark: SparkSession, path: String): DataFrame = {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types._
@@ -145,7 +189,12 @@ object Loader {
     val urlkey = regexp_extract(line, "^(\\S+)", 1)
     val ts = regexp_extract(line, "^\\S+\\s+([0-9]+)", 1)
     val js = regexp_extract(line, "^\\S+\\s+\\S+\\s+(\\{.*\\})$", 1)
-    floorParallelism(spark.read.text(path))
+    // a small index file is ONE text split, so the whole pipeline above it
+    // — line parse, from_json, broadcast-join probe, map-side window
+    // limits — would run in one task however many cores the session has;
+    // kernel sizing: ~16 KB of raw index lines ≈ a few hundred regex+JSON
+    // parses ≈ tens of ms per task
+    flooredScan(spark, "text", path, KernelBytesPerTask)
       .filter(line =!= "")
       .select(
         when(urlkey =!= "", urlkey).as("urlkey"),

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Shuffle-Exchange census over every driver-contract query — regenerates
   * QueriesSmokeSpec's pinned expectedExchanges table (which calls
@@ -17,12 +17,7 @@ object CountX {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Session.local(8)
     spark.sparkContext.setLogLevel("ERROR")
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
     graft.SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.core.Pipeline
 import graft.transformers._
@@ -10,17 +9,7 @@ import graft.transformers._
 object Demo {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      // kept for older drops with TIMESTAMP(NANOS) events; no-op for
-      // current TIMESTAMP(MICROS) drops
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local(4)
 
     val li = spark.read.parquet(s"$dir/lineitem.parquet")
       // inject some nulls so imputation has real work
@@ -65,7 +54,7 @@ object Demo {
         .groupBy("split").count().collect().map(r => s"${r.getString(0)}:${r.getLong(1)}")
         .sorted.mkString(", ")}")
 
-    // Round-4 ops (vanilla session — every one runs through its fallback).
+    // Round-4 ops.
     println(s"curate: ${docs.count()} -> " +
       s"${graft.ops.Curation.curate(docs.select("doc_id", "text"), "doc_id", "text",
         maxTopWordFrac = 0.5, nearDup = false).count()} docs after quality+repetition+fp-dedup")

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan auditor: prints `.explain("formatted")` for the named SparkEntry
   * queries (all when none given) — used to eyeball pushdown, broadcast
   * choices, and codegen spans per round. */
@@ -11,14 +9,7 @@ object Explain {
     // SPARK_GRAFT_CPUS lets plan dumps reproduce the BENCH session shape
     // (local[32], shuffle.partitions=32 at sf0.1) instead of the test shape
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.local(cpus.toInt)
     spark.sparkContext.setLogLevel("ERROR")
     val names = if (args.nonEmpty) args.toSeq else graft.SparkEntry.queries.keys.toSeq.sorted
     names.foreach { n =>

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Scale-up generator for the SCALING self-measurement (BASELINE.md):
@@ -47,14 +47,7 @@ object ScaleData {
     val factor = factorS.toInt
     require(factor >= 1, "factor must be >= 1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local(cpus.toInt)
     def rt(name: String) = spark.read.parquet(s"$srcDir/$name.parquet")
     def wr(df: DataFrame, name: String): Unit =
       df.write.mode("overwrite").parquet(s"$dstDir/$name.parquet")

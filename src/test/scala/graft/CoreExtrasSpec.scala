@@ -89,6 +89,22 @@ class CoreExtrasSpec extends SparkSpec {
     rows(2).isNullAt(rows(2).fieldIndex("status")) shouldBe true // '-' → NULL via try_cast
   }
 
+  test("Loader.flooredScan: the floor decision follows a table rewritten in-process") {
+    import org.apache.spark.sql.catalyst.plans.logical.Repartition
+    val path = java.nio.file.Files.createTempDirectory("graft_floor_t")
+      .resolve("t.parquet").toString
+    // one file each time; hex digests barely compress, so bytes ∝ rows
+    def write(rows: Long): Unit =
+      spark.range(rows).selectExpr("id", "sha2(cast(id AS STRING), 256) AS h")
+        .coalesce(1).write.mode("overwrite").parquet(path)
+    def floored: Boolean = Loader.flooredScan(spark, "parquet", path, 4096L)
+      .queryExecution.logical.collectFirst { case r: Repartition => r }.isDefined
+    write(1) // below one task's bytes: no Exchange
+    floored shouldBe false
+    write(5000) // same path, now many tasks' bytes in one unsplit file
+    floored shouldBe true
+  }
+
   test("WARC write mirror: WET export round-trips through the reader; contract enforced") {
     import org.apache.spark.sql.functions._
     val docs = spark.range(7).selectExpr(

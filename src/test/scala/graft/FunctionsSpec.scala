@@ -273,15 +273,9 @@ class FunctionsSpec extends SparkSpec {
       "dup dup dup dup dup", // repeated n-grams collapse to one hash
       "",
       "   \t\r\n  ").toDF("text")
-    import org.apache.spark.sql.{functions => F}
-    val toks = filter(split(lower($"text"), "\\s+"), t => t =!= "")
-    val hof = when(F.size(toks) >= 3,
-      array_distinct(transform(sequence(lit(0), F.size(toks) - 3),
-        i => xxhash64(concat_ws(" ", slice(toks, i + lit(1), lit(3)))))))
-      .otherwise(array().cast("array<bigint>"))
     val rows = docs.select(
       call_function(TilePairs.TokenNgramName, $"text", lit(3)).as("k"),
-      hof.as("f"))
+      graft.ops.Dedup.tokenNgramHashesFallback($"text", 3).as("f"))
       .collect()
     rows.foreach(r => r.getSeq[Long](0) shouldBe r.getSeq[Long](1))
     // null text → empty (the when(...).otherwise fallback behavior)
@@ -301,17 +295,9 @@ class FunctionsSpec extends SparkSpec {
       "   \t\r\n  ").toDF("text")
     val dim = 8
     val seed = 42L
-    val toks = filter(split(lower($"text"), "\\s+"), t => t =!= "")
-    val bs = transform(toks, t => struct(
-      pmod(xxhash64(lit(seed), t), lit(dim.toLong)).cast("int").as("b"),
-      when(pmod(xxhash64(lit(seed + 1L), t), lit(2L)) === 0L, lit(1.0))
-        .otherwise(lit(-1.0)).as("s")))
-    val hof = aggregate(bs, array_repeat(lit(0.0), dim),
-      (acc, x) => transform(acc,
-        (v, i) => v + when(i === x("b"), x("s")).otherwise(lit(0.0))))
     val rows = docs.select(
       call_function(TilePairs.HashEmbedName, $"text", lit(dim), lit(seed)).as("k"),
-      hof.as("f")).collect()
+      graft.ops.Retrieval.hashEmbedFallback($"text", dim, seed).as("f")).collect()
     rows.foreach { r =>
       r.getSeq[Double](0) shouldBe r.getSeq[Double](1)
     }
@@ -926,8 +912,7 @@ class FunctionsSpec extends SparkSpec {
     val df = targets.toDF("t").selectExpr("t", s"$rules AS rules")
     val out = df.select($"t",
       call_function(TilePairs.RobotsVerdictName, $"t", $"rules").as("k"),
-      get(filter($"rules", r => regexp_like($"t", r.getField("pat"))), lit(0))
-        .getField("kr").as("hof"))
+      graft.ops.Robots.robotsVerdictFallback($"t", $"rules").as("hof"))
       .collect()
       .map(r => r.getString(0) -> ((
         if (r.isNullAt(1)) None else Some(r.getInt(1)),

@@ -19,6 +19,33 @@ class OpsSpec extends SparkSpec {
 
   // ── Dedup ────────────────────────────────────────────────────────────
 
+  /** Driver-side brute-force exact n-gram Jaccard: every (a ∈ left,
+    * b ∈ right) pair — a < b when `self` — whose distinct character
+    * n-gram sets reach `threshold`. Texts shorter than n have no n-grams
+    * and never pair. The reference the LSH / prefix-filter pipelines must
+    * reproduce exactly. */
+  private def bruteJaccardPairs(
+      left: Seq[(Long, String)], right: Seq[(Long, String)],
+      n: Int, threshold: Double, self: Boolean): Set[(Long, Long, Double)] = {
+    def grams(t: String): Set[String] = {
+      val cps = t.codePoints().toArray
+      (0 to cps.length - n).map(i => new String(cps, i, n)).toSet
+    }
+    val l = left.map { case (id, t) => (id, grams(t)) }.filter(_._2.nonEmpty)
+    val r = right.map { case (id, t) => (id, grams(t)) }.filter(_._2.nonEmpty)
+    (for {
+      (a, ga) <- l
+      (b, gb) <- r
+      if !self || a < b
+      common = ga.count(gb)
+      j = common.toDouble / (ga.size + gb.size - common).toDouble
+      if j >= threshold
+    } yield (a, b, j)).toSet
+  }
+
+  private def idText(df: org.apache.spark.sql.DataFrame): Seq[(Long, String)] =
+    df.select("doc_id", "text").collect().map(r => (r.getLong(0), r.getString(1))).toSeq
+
   test("Dedup.exact keeps one row per key with the smallest tiebreak") {
     val out = Dedup.exact(docs, Seq("text"), "doc_id")
     out.count() shouldBe 3
@@ -94,22 +121,17 @@ class OpsSpec extends SparkSpec {
     general shouldBe bitmap
   }
 
-  test("native-kernel and pure-Column fallback pipelines agree on real documents") {
+  test("minhashDedupPairs and ngramJaccardPairs equal a brute-force exact-Jaccard reference") {
     val d = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val real = d.unionByName(
       d.filter($"doc_id" % 5 === 0).withColumn("doc_id", $"doc_id" + 10000))
-    def run(op: => org.apache.spark.sql.DataFrame): Seq[(Long, Long, Double)] =
-      op.orderBy("id_a", "id_b").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    def both(op: => org.apache.spark.sql.DataFrame): Unit = {
-      val native = run(op)
-      val fallback = try { Dedup.ForceFallback = true; run(op) }
-      finally Dedup.ForceFallback = false
-      native should not be empty
-      fallback shouldBe native
-    }
-    both(Dedup.minhashDedupPairs(real, "doc_id", "text"))
-    both(Dedup.ngramJaccardPairs(real, "doc_id", "text"))
+    val rows = idText(real)
+    val truth = bruteJaccardPairs(rows, rows, 3, 0.8, self = true)
+    truth should not be empty // the injected copies guarantee pairs
+    def run(op: org.apache.spark.sql.DataFrame): Set[(Long, Long, Double)] =
+      op.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    run(Dedup.minhashDedupPairs(real, "doc_id", "text")) shouldBe truth
+    run(Dedup.ngramJaccardPairs(real, "doc_id", "text")) shouldBe truth
   }
 
   test("Dedup.duplicateClusters: chains collapse to min-id components") {
@@ -147,19 +169,14 @@ class OpsSpec extends SparkSpec {
     out.map(p => (p._1, p._2)).toSet shouldBe Set((1L, 1L), (2L, 1L))
     out.find(p => p._1 == 1L).get._3 shouldBe 1.0 // identical text
     // the left-side near-dup pair (1,2) must NOT appear — cross pairs only
-    // all four path combinations (native/fallback × bitmap/general) agree
+    // the bitmap and general-vocabulary paths both equal brute force
+    val truth = bruteJaccardPairs(idText(left), idText(right), 3, 0.5, self = false)
+    out.toSet shouldBe truth
     val savedVocab = Dedup.MaxBitmapVocab
     try {
-      Dedup.ForceFallback = true
-      run() shouldBe out
       Dedup.MaxBitmapVocab = 0
-      run() shouldBe out
-      Dedup.ForceFallback = false
-      run() shouldBe out
-    } finally {
-      Dedup.ForceFallback = false
-      Dedup.MaxBitmapVocab = savedVocab
-    }
+      run().toSet shouldBe truth
+    } finally Dedup.MaxBitmapVocab = savedVocab
   }
 
   test("new ops tolerate empty inputs") {
@@ -378,7 +395,7 @@ class OpsSpec extends SparkSpec {
     }
   }
 
-  test("Similarity.groupCentroids: kernel and fallback agree, nulls skipped") {
+  test("Similarity.groupCentroids: exact per-group means, nulls skipped") {
     val df = Seq(
       (0, Seq(1.0f, 2.0f)), (0, Seq(3.0f, 6.0f)), (0, null),
       (1, Seq(-1.0f, 0.5f)),
@@ -390,10 +407,6 @@ class OpsSpec extends SparkSpec {
     fast shouldBe Set(
       (0, Seq(2.0, 4.0), 2L),   // null vector excluded from count and mean
       (1, Seq(-1.0, 0.5), 1L))
-    val prev = Dedup.ForceFallback
-    Dedup.ForceFallback = true
-    try key(Similarity.groupCentroids(df, "label", "embedding").collect()) shouldBe fast
-    finally Dedup.ForceFallback = prev
   }
 
   test("Relational.sessionize splits per-key timelines on inactivity gaps") {
@@ -987,11 +1000,10 @@ class OpsSpec extends SparkSpec {
     val flagged = Similarity.embeddingOutliers(df, "vec_id", "embedding", z = 3.0)
       .collect().map(_.getLong(0)).toSet
     flagged shouldBe Set(99L)
-    // kernel-mean and fallback-mean fits agree after rounding
+    // the kernel-mean fit equals the driver-side mean after rounding
     val st = Similarity.embeddingOutlierStats(df, "embedding")
-    val fb = try { Dedup.ForceFallback = true; Similarity.embeddingOutlierStats(df, "embedding") }
-    finally Dedup.ForceFallback = false
-    fb shouldBe st
+    def round9(x: Double): Double = math.rint(x * 1e9) / 1e9
+    st.mean shouldBe (0 until 3).map(i => round9(all.map(_._2(i).toDouble).sum / all.size))
     // pre-fitted stats skip the fit jobs and give the same answer
     Similarity.embeddingOutliers(df, "vec_id", "embedding", z = 3.0, stats = st)
       .collect().map(_.getLong(0)).toSet shouldBe Set(99L)
@@ -1085,7 +1097,7 @@ class OpsSpec extends SparkSpec {
     }
   }
 
-  test("Similarity.pcaFit recovers the dominant axis; kernel and fallback agree") {
+  test("Similarity.pcaFit recovers the dominant axis; matches a driver-side eigensolve") {
     // points along y = 2x in 3D, tiny deterministic z jitter
     val pts = (0 until 40).map { i =>
       val t = (i - 20).toDouble / 10.0
@@ -1099,12 +1111,22 @@ class OpsSpec extends SparkSpec {
     math.abs(w0(2)) should be < 0.01
     w0(1) should be > 0.0
     m.eigenvalues.head should be > m.eigenvalues(1)
-    // the no-kernel fallback lands on the same 1e-9-rounded covariance →
-    // identical model
-    val fb = try { Dedup.ForceFallback = true; Similarity.pcaFit(df, "embedding", 2) }
-    finally Dedup.ForceFallback = false
-    fb.components shouldBe m.components
-    fb.mean shouldBe m.mean
+    // driver-side reference: mean and 1e-9-rounded sample covariance of
+    // the collected points, eigensolved → the same mean, spectrum and
+    // (sign-normalized) components
+    val xs = pts.map(_._2.map(_.toDouble).toArray)
+    val center = Array.tabulate(3)(i => xs.map(_(i)).sum / xs.length)
+    def round9(x: Double): Double = math.rint(x * 1e9) / 1e9
+    val cov = Array.tabulate(3, 3)((i, j) =>
+      round9(xs.map(x => (x(i) - center(i)) * (x(j) - center(j))).sum / (xs.length - 1)))
+    val (vals, vecs) = Similarity.jacobiEigen(cov)
+    val top = vals.indices.sortBy(i => -vals(i)).take(2)
+    m.mean.zip(center).foreach { case (a, b) => a shouldBe b +- 1e-12 }
+    m.eigenvalues.zip(top.map(vals(_))).foreach { case (a, b) => a shouldBe b +- 1e-9 }
+    m.components.zip(top.map(vecs(_))).foreach { case (w, v) =>
+      val sgn = math.signum(v(v.indices.maxBy(i => math.abs(v(i)))))
+      w.zip(v).foreach { case (a, b) => a shouldBe (b * sgn) +- 1e-6 }
+    }
     // sample variance of the first projected coordinate = its eigenvalue
     val proj = Similarity.pcaProject(df, "embedding", m)
       .select("embedding_pca").collect().map(_.getSeq[Double](0))
@@ -1264,21 +1286,13 @@ class OpsSpec extends SparkSpec {
     val expect = Seq(Some(0L), Some(1L), Some(2L), Some(4L),
       Some(5L), Some(5L), None).sortBy(_.map(_.toString))
     survivors shouldBe expect
-    val fallback = try {
-      Dedup.ForceFallback = true; survivors
-    } finally Dedup.ForceFallback = false
-    fallback shouldBe expect
     // cosineNearDupPairs handles NULL ids / zero norms / NaN norms itself:
-    // only genuine pairs emerge, identically on both paths ((5,6) arrives
-    // once per id-5 copy and dedups to one row)
+    // only genuine pairs emerge ((5,6) arrives once per id-5 copy and
+    // dedups to one row)
     def pairs = Similarity.cosineNearDupPairs(d, "vec_id", "embedding",
       threshold = 0.95, dim = 2).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     pairs shouldBe Set((0L, 3L), (5L, 5L), (5L, 6L))
-    val pairsFallback = try {
-      Dedup.ForceFallback = true; pairs
-    } finally Dedup.ForceFallback = false
-    pairsFallback shouldBe Set((0L, 3L), (5L, 5L), (5L, 6L))
   }
 
   test("semanticDedup counts capped cells; their members all survive") {
@@ -1304,18 +1318,25 @@ class OpsSpec extends SparkSpec {
     BucketCap.drops(spark, "semanticDedup") shouldBe ((0L, 0L))
   }
 
-  test("cosineNearDupPairs HOF fallback agrees with the native kernel") {
-    val mixed = ((0L until 40L).map(i => (i, Seq(0.6f, 0.8f, 0.0f))) ++
-      Seq((100L, Seq(1.0f, 0.0f, 0.0f)), (101L, Seq(0.0f, 1.0f, 0.0f))))
-      .toDF("vec_id", "embedding")
-    def run() = Similarity.cosineNearDupPairs(mixed, "vec_id", "embedding",
+  test("cosineNearDupPairs equals a driver-side brute-force cosine reference") {
+    val vecs = (0L until 40L).map(i => (i, Seq(0.6f, 0.8f, 0.0f))) ++
+      Seq((100L, Seq(1.0f, 0.0f, 0.0f)), (101L, Seq(0.0f, 1.0f, 0.0f)))
+    val mixed = vecs.toDF("vec_id", "embedding")
+    val native = Similarity.cosineNearDupPairs(mixed, "vec_id", "embedding",
       threshold = 0.95, dim = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val native = run()
-    val saved = Dedup.ForceFallback
-    val hof = try { Dedup.ForceFallback = true; run() }
-    finally Dedup.ForceFallback = saved
-    native shouldBe hof // same pairs, bit-identical cosines
+    // the kernel's arithmetic: sequential double fold, norms from the same
+    // fold — so the cosines match bit for bit
+    def dot(a: Seq[Float], b: Seq[Float]): Double =
+      a.zip(b).foldLeft(0.0) { case (acc, (x, y)) => acc + x.toDouble * y.toDouble }
+    val truth = (for {
+      (a, ea) <- vecs
+      (b, eb) <- vecs
+      if a < b
+      cos = dot(ea, eb) / (math.sqrt(dot(ea, ea)) * math.sqrt(dot(eb, eb)))
+      if cos >= 0.95
+    } yield (a, b, cos)).toSet
+    native shouldBe truth
     native.map(p => (p._1, p._2)) should contain((0L, 1L))
   }
 
@@ -1470,25 +1491,22 @@ class OpsSpec extends SparkSpec {
   test("repetition kernel is bit-identical to the HOF fallback on real docs") {
     val d = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select("doc_id", "text")
-    def run(): Seq[(Long, Double, Double, Double)] =
-      TextOps.repetitionFeatures(d, "text").orderBy("doc_id").collect()
+    type Features = (org.apache.spark.sql.DataFrame, String) => org.apache.spark.sql.DataFrame
+    def run(f: Features): Seq[(Long, Double, Double, Double)] =
+      f(d, "text").orderBy("doc_id").collect()
         .map(r => (r.getLong(0), r.getDouble(2), r.getDouble(3), r.getDouble(4))).toSeq
-    val native = run()
-    val fallback = try { Dedup.ForceFallback = true; run() }
-    finally Dedup.ForceFallback = false
+    val native = run(TextOps.repetitionFeatures)
     native should not be empty
-    fallback shouldBe native
+    run(TextOps.repetitionFeaturesFallback) shouldBe native
     // hand cases the corpus may not cover: empty, single-token, null text
     val edge = Seq((1L, Some("")), (2L, Some("word")), (3L, None),
       (4L, Some("a a b")), (5L, Some("x y x y")))
       .toDF("doc_id", "text")
-    def runEdge(): Seq[(Long, Double, Double, Double)] =
-      TextOps.repetitionFeatures(edge, "text").orderBy("doc_id").collect()
+    def runEdge(f: Features): Seq[(Long, Double, Double, Double)] =
+      f(edge, "text").orderBy("doc_id").collect()
         .map(r => (r.getLong(0), r.getDouble(2), r.getDouble(3), r.getDouble(4))).toSeq
-    val ne = runEdge()
-    val fe = try { Dedup.ForceFallback = true; runEdge() }
-    finally Dedup.ForceFallback = false
-    fe shouldBe ne
+    val ne = runEdge(TextOps.repetitionFeatures)
+    runEdge(TextOps.repetitionFeaturesFallback) shouldBe ne
     ne.find(_._1 == 4L).get shouldBe (4L, 1.0 - 2.0 / 3.0, 2.0 / 3.0, 0.5)
     ne.find(_._1 == 3L).get shouldBe (3L, 0.0, 0.0, 0.0)
   }
@@ -1788,11 +1806,9 @@ class OpsSpec extends SparkSpec {
     loaded.bloom.map(_.toSeq) shouldBe fitted.bloom.map(_.toSeq)
     Dedup.contaminationApply(corpus, "doc_id", "text", loaded)
       .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq shouldBe direct
-    // a fallback-session fit (no kernels) persists a bloom-less index that
-    // still probes exactly; a native session can consume it
-    val saved = Dedup.ForceFallback
-    val fbIdx = try { Dedup.ForceFallback = true; Dedup.contaminationFit(bench, "text", n = 4) }
-    finally Dedup.ForceFallback = saved
+    // a bloom-less fit persists an exact-join-only index that still
+    // probes exactly
+    val fbIdx = Dedup.contaminationFit(bench, "text", n = 4, useBloom = false)
     fbIdx.bloom shouldBe None
     val dir2 = java.nio.file.Files.createTempDirectory("graft_contam_spec_fb").toString
     fbIdx.save(dir2)
@@ -2610,7 +2626,7 @@ class OpsSpec extends SparkSpec {
       (5L, null.asInstanceOf[String]), // NULL text → [] on BOTH paths
     ).toDF("id", "text")
     spark.catalog.functionExists(graft.functions.TilePairs.BpeName) shouldBe true
-    val native = df.select($"id", Bpe.bpeTokens(spark, $"text", bpeFix).as("t"))
+    val native = df.select($"id", Bpe.bpeTokens($"text", bpeFix).as("t"))
       .collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
     val fallback = df.select($"id", Bpe.bpeTokensFallback($"text", bpeFix).as("t"))
       .collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
@@ -2686,7 +2702,7 @@ class OpsSpec extends SparkSpec {
     // byteLevel tokenization under the imported merges, GPT-2 pretok:
     // " the" → Ġthe → [Ġ, the] (t+h, th+e fire; Ġ+t no longer adjacent),
     // " cat" → [Ġ, c, a, t] (no merge applies)
-    val toks = Bpe.bpeTokens(spark, lit(" the cat"), m,
+    val toks = Bpe.bpeTokens(lit(" the cat"), m,
       pretok = Some(Bpe.Gpt2PretokPattern), byteLevel = true)
     val got = Seq(Tuple1(1)).toDF("x").select(toks.as("t"))
       .head().getSeq[String](0)
@@ -2720,7 +2736,7 @@ class OpsSpec extends SparkSpec {
     vocab.take(2) shouldBe Seq("Ā" -> 0, "ā" -> 1) // bytes 0, 1 → U+0100, U+0101
     vocab.last shouldBe ("ing" -> 260)
     // application matches tiktoken's greedy lowest-rank-pair semantics
-    val toks = Bpe.bpeTokens(spark, lit(" and inking"), m,
+    val toks = Bpe.bpeTokens(lit(" and inking"), m,
       pretok = Some(Bpe.Gpt2PretokPattern), byteLevel = true)
     Seq(Tuple1(1)).toDF("x").select(toks.as("t")).head().getSeq[String](0) shouldBe
       Seq(G, "and", G, "in", "k", "ing")
@@ -2783,7 +2799,7 @@ class OpsSpec extends SparkSpec {
     java.nio.file.Files.writeString(d.resolve("r.tiktoken"),
       (singles ++ Seq(b64("12") + " 256")).mkString("\n") + "\n")
     val (m2, _) = Bpe.loadTiktoken(d.resolve("r.tiktoken").toString)
-    val toks = Bpe.bpeTokens(spark, lit("9 12345"), m2,
+    val toks = Bpe.bpeTokens(lit("9 12345"), m2,
       pretok = Some(Bpe.Cl100kPretokPattern), byteLevel = true)
     // "12345" chunks to "123","45" BEFORE merging, so "12" only fuses
     // inside the first chunk: [9, Ġ? ...] — byte alphabet: space → Ġ
@@ -2831,7 +2847,7 @@ class OpsSpec extends SparkSpec {
     java.nio.file.Files.writeString(d.resolve("r.tiktoken"),
       (singles ++ Seq(b64("it") + " 256")).mkString("\n") + "\n")
     val (m2, _) = Bpe.loadTiktoken(d.resolve("r.tiktoken").toString)
-    val toks = Bpe.bpeTokens(spark, lit("it's it"), m2,
+    val toks = Bpe.bpeTokens(lit("it's it"), m2,
       pretok = Some(Bpe.O200kPretokPattern), byteLevel = true)
     // pre-tokens ["it's", " it"]: "it" merges inside both (the second
     // under the byte alphabet's Ġ space prefix, which blocks nothing —
@@ -2887,11 +2903,11 @@ class OpsSpec extends SparkSpec {
     m.merges shouldBe Seq(("a", "n"), ("an", "d"), (W, "t"), ("t", "h"),
       (s"${W}t", "h"), (s"${W}th", "e"))
     // ▁ preprocessing + merge application: "the and" → [▁the, ▁, and]
-    val toks = Bpe.bpeTokens(spark, Bpe.spPretokEncode(lit("the and")), m)
+    val toks = Bpe.bpeTokens(Bpe.spPretokEncode(lit("the and")), m)
     Seq(Tuple1(1)).toDF("x").select(toks.as("t")).head().getSeq[String](0) shouldBe
       Seq(s"${W}the", W, "and")
     // NULL text → no tokens (the tokenizer convention)
-    val nullToks = Bpe.bpeTokens(spark,
+    val nullToks = Bpe.bpeTokens(
       Bpe.spPretokEncode(lit(null).cast("string")), m)
     Seq(Tuple1(1)).toDF("x").select(nullToks.as("t")).head().getSeq[String](0) shouldBe
       Seq.empty
@@ -2907,7 +2923,7 @@ class OpsSpec extends SparkSpec {
     val idx = loadedB.zipWithIndex.map { case (p, i) => (p.piece, i) }.toMap
     val ids = Seq(Tuple1(1)).toDF("x").select(
       Bpe.spByteFallbackIds(
-        Bpe.bpeTokens(spark, Bpe.spPretokEncode(lit("the Bé")), mB),
+        Bpe.bpeTokens(Bpe.spPretokEncode(lit("the Bé")), mB),
         loadedB).as("i")).head().getSeq[Int](0)
     ids shouldBe Seq(idx(s"${W}the"), idx(W), idx("<0x42>"),
       idx("<0xC3>"), idx("<0xA9>"))
@@ -2946,7 +2962,7 @@ class OpsSpec extends SparkSpec {
     def P(p: String, s: Double, k: Int = 1) = SpPiece(p, s.toFloat, k)
     def toks(text: String, pieces: Seq[SpPiece]): Seq[String] =
       Seq(Tuple1(1)).toDF("x")
-        .select(Bpe.unigramTokens(spark, lit(text), pieces).as("t"))
+        .select(Bpe.unigramTokens(lit(text), pieces).as("t"))
         .head().getSeq[String](0)
     def toksFb(text: String, pieces: Seq[SpPiece]): Seq[String] = {
       val (surf, sc) = Bpe.unigramTable(pieces)
@@ -2984,7 +3000,7 @@ class OpsSpec extends SparkSpec {
     // NULL / empty → empty array
     toks("", vp) shouldBe Seq.empty
     Seq(Tuple1(1)).toDF("x")
-      .select(Bpe.unigramTokens(spark, lit(null).cast("string"), vp).as("t"))
+      .select(Bpe.unigramTokens(lit(null).cast("string"), vp).as("t"))
       .head().getSeq[String](0) shouldBe Seq.empty
     // kernel and pure-Column fallback are bit-identical, including the
     // tie rule, unk handling, and astral steps
@@ -3014,7 +3030,7 @@ class OpsSpec extends SparkSpec {
       (0 until 256).map(k => P(f"<0x$k%02X>", 0, 6))
     val enc = Seq(Tuple1(1)).toDF("x").select(
       Bpe.spByteFallbackIds(
-        Bpe.unigramTokens(spark, Bpe.spPretokEncode(lit("ab 7a")), full),
+        Bpe.unigramTokens(Bpe.spPretokEncode(lit("ab 7a")), full),
         full).as("i")).head().getSeq[Int](0)
     Bpe.spDecodeIds(enc, full) shouldBe "ab 7a"
     // the DataFrame wrappers: tokens + counts + fertility stats
@@ -3215,13 +3231,11 @@ class OpsSpec extends SparkSpec {
     def unseen(i: Dedup.KeyIndex) =
       Dedup.keyIndexApply(inc, "url", i).collect().map(_.getLong(0)).sorted.toSeq
     unseen(loaded) shouldBe Seq(11L, 13L, 14L)
+    // bloom-free index (useBloom = false) is the same exact filter: the
     // bloom and exact-only paths agree row for row
-    val fallback = try {
-      Dedup.ForceFallback = true; unseen(loaded)
-    } finally Dedup.ForceFallback = false
-    fallback shouldBe Seq(11L, 13L, 14L)
-    // bloom-free index (useBloom = false) is the same exact filter
-    Dedup.keyIndexFit(corpus, "url", useBloom = false).bloom shouldBe None
+    val exactOnly = Dedup.keyIndexFit(corpus, "url", useBloom = false)
+    exactOnly.bloom shouldBe None
+    unseen(exactOnly) shouldBe Seq(11L, 13L, 14L)
   }
 
   test("categoryDriftPsi surfaces vanished and appearing categories with clamped shares") {
@@ -4116,6 +4130,16 @@ class OpsSpec extends SparkSpec {
       .toDF("id", "url")
     graft.ops.Url.domainFilter(docs2, "url", block)
       .select("id").collect().map(_.getLong(0)).toSeq shouldBe Seq(2L)
+  }
+
+  test("LinkGraph.domainCentrality returns a materialized frame for every horizon") {
+    import graft.ops.LinkGraph
+    val edges = Seq(("a.com", "b.com", 2L), ("b.com", "c.com", 3L))
+      .toDF("src_domain", "dst_domain", "n_links")
+    for (it <- Seq(0, 3)) withClue(s"iterations = $it: ") {
+      LinkGraph.domainCentrality(edges, iterations = it).queryExecution.logical shouldBe
+        a[org.apache.spark.sql.execution.LogicalRDD]
+    }
   }
 
   test("LinkGraph.watOutlinks: anchors-only default, full-resource mode, lenient JSON") {

@@ -315,7 +315,7 @@ class PropertySpec extends SparkSpec {
       val df = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
         .toDF("id", "text")
       val native = df
-        .select($"id", graft.ops.Bpe.bpeTokens(spark, $"text", model).as("t"))
+        .select($"id", graft.ops.Bpe.bpeTokens($"text", model).as("t"))
         .collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
       val fallback = df
         .select($"id", graft.ops.Bpe.bpeTokensFallback($"text", model).as("t"))
