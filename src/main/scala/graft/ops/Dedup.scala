@@ -1,8 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StructType}
 
 /** Deduplication operators for large-scale training-data pipelines.
   *
@@ -10,9 +11,10 @@ import org.apache.spark.sql.functions._
   * no dedup of any kind. Everything here is built from Catalyst expressions
   * (higher-order array functions + xxhash64, plus the native tile-pair
   * expressions of graft.functions, which [[graft.functions.GraftExtensions]]
-  * must register on the session) — no UDFs, and no driver-side data
-  * state, so each operator is a fixed number of shuffles regardless of
-  * data size.
+  * must register on the session) — no UDFs, and no driver-side data state
+  * beyond capped probes ([[smallVocabFreq]]'s vocabulary, the bounded pair
+  * graph of [[duplicateClusters]]), so each operator is a fixed number of
+  * shuffles regardless of data size.
   *
   * Scale design rules shared by every operator below:
   *  - expensive per-row expressions (shingling, signatures) are computed in
@@ -751,30 +753,120 @@ object Dedup {
 
   // ───────────────────── duplicate-cluster assignment ─────────────────────
 
-  /** Iteration cap for [[duplicateClusters]] — pointer jumping halves the
-    * forest depth each round, so 50 covers any graph that fits on disk. */
-  var MaxClusterIters: Int = 50
+  /** Edge count up to which [[duplicateClusters]] labels components on the
+    * driver: 2^16 edges are ~1 MB collected and the label relation at most
+    * 2^17 (id, cluster_id) rows (~2 MB broadcast). */
+  private[graft] val MaxDriverClusterEdges: Int = 1 << 16
 
-  /** Connected components over a duplicate-pair graph: one row per id of
-    * `df` with `cluster_id` = the smallest id in its component (singletons
-    * cluster to themselves) — the step that turns pairwise near-dup output
-    * into "keep one representative per duplicate cluster".
+  /** Round cap for [[duplicateClustersIterative]] — pointer jumping halves
+    * the forest depth each round, so 50 covers any graph that fits on disk. */
+  private val MaxClusterIters = 50
+
+  /** Connected components over a duplicate-pair graph: one row per DISTINCT
+    * non-NULL id of `df`, columns (`id`, `cluster_id`), with `cluster_id` =
+    * the smallest id in its component (singletons cluster to themselves) —
+    * the step that turns pairwise near-dup output into "keep one
+    * representative per duplicate cluster".
     *
-    * Pregel-style label propagation: each round takes the min label over
-    * graph neighbors (one join + partial-agg groupBy) and then POINTER-JUMPS
-    * (label := label of label, one self-join) so chains collapse in
-    * O(log diameter) rounds instead of O(diameter). Every round materializes
-    * via `localCheckpoint` — truncated lineage, each label table used twice
-    * without recomputation; only the per-round change COUNT reaches the
-    * driver. Duplicate graphs are near-cliques, so this converges in 2-3
-    * rounds in practice.
+    * The graph is the one `pairs` (`id_a`, `id_b`) induces on the ids of
+    * `df`: an edge with an endpoint outside `df` — or a NULL endpoint — is
+    * ignored, and NULL ids of `df` are dropped. Self-loops, repeated and
+    * reversed edges are harmless.
+    *
+    * Bounded graphs (≤ [[MaxDriverClusterEdges]] induced edges, integral
+    * ids — every duplicate graph the dedup ops build at batch scale) are
+    * labelled on the DRIVER: ONE job collects the induced edges (capped at
+    * the bound + 1, so an unbounded graph never reaches the driver),
+    * union-find labels them, and the result is `df`'s ids left-joined to
+    * the broadcast (id, cluster_id) table — lazy, lineage intact, no
+    * checkpoint, every shuffle visible to the plan. Larger graphs, and
+    * non-integral ids, take [[duplicateClustersIterative]]; the probe is
+    * then recomputed once, the [[smallVocabFreq]] convention.
     */
   def duplicateClusters(df: DataFrame, idCol: String, pairs: DataFrame): DataFrame = {
-    val edges = pairs
-      .select(col("id_a").as("src"), col("id_b").as("dst"))
-      .unionByName(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
+    val ids = clusterIds(df, idCol)
+    val edges = inducedEdges(ids, pairs)
+    val integral = ids.schema("id").dataType match {
+      case ByteType | ShortType | IntegerType | LongType => true
+      case _ => false
+    }
+    val probe = Option.when(integral)(
+      edges.select(col("src").cast("long"), col("dst").cast("long"))
+        .limit(MaxDriverClusterEdges + 1).collect())
+    probe.filter(_.length <= MaxDriverClusterEdges) match {
+      case Some(rows) => labelOnDriver(ids, rows.map(r => (r.getLong(0), r.getLong(1))))
+      case None => iterateClusters(ids, edges)
+    }
+  }
+
+  /** [[duplicateClusters]] by distributed label propagation, whatever the
+    * graph size — its large-graph path, and the reference the driver path
+    * is tested against.
+    *
+    * Pregel-style: each round takes the min label over graph neighbors (one
+    * join + partial-agg groupBy) and then POINTER-JUMPS (label := label of
+    * label, one self-join) so chains collapse in O(log diameter) rounds
+    * instead of O(diameter). Every round materializes — each label table is
+    * read twice (the change count and the next round) and the plan would
+    * otherwise nest one level per round; only the per-round change COUNT
+    * reaches the driver. Duplicate graphs are near-cliques, so this
+    * converges in 2-3 rounds in practice; a graph still changing after
+    * [[MaxClusterIters]] rounds is an error, never unconverged labels.
+    */
+  private[graft] def duplicateClustersIterative(
+      df: DataFrame, idCol: String, pairs: DataFrame): DataFrame = {
+    val ids = clusterIds(df, idCol)
+    iterateClusters(ids, inducedEdges(ids, pairs))
+  }
+
+  /** The distinct non-NULL ids of `df` as column `id`. */
+  private def clusterIds(df: DataFrame, idCol: String): DataFrame =
+    df.select(col(idCol).as("id")).filter(col("id").isNotNull).distinct()
+
+  /** The (src, dst) edges `pairs` induces on `ids`: both endpoints must be
+    * ids (semi-joins drop NULL endpoints too). */
+  private def inducedEdges(ids: DataFrame, pairs: DataFrame): DataFrame =
+    pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
+      .join(ids.select(col("id").as("src")), Seq("src"), "left_semi")
+      .join(ids.select(col("id").as("dst")), Seq("dst"), "left_semi")
+      .select("src", "dst")
+
+  /** Union-by-min with path compression over collected edges — each root
+    * is its component's minimum id — returned as `ids` left-joined to the
+    * broadcast label table of the non-singleton ids. */
+  private def labelOnDriver(ids: DataFrame, edges: Array[(Long, Long)]): DataFrame = {
+    val parent = scala.collection.mutable.LongMap.empty[Long]
+    def find(x: Long): Long = {
+      var root = x
+      while (parent(root) != root) root = parent(root)
+      var cur = x
+      while (cur != root) { val next = parent(cur); parent(cur) = root; cur = next }
+      root
+    }
+    edges.foreach { case (a, b) =>
+      parent.getOrElseUpdate(a, a)
+      parent.getOrElseUpdate(b, b)
+      val (ra, rb) = (find(a), find(b))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+    }
+    val spark = ids.sparkSession
+    val idType = ids.schema("id").dataType
+    val rows = new java.util.ArrayList[Row](parent.size)
+    parent.keys.foreach(k => rows.add(Row(k, find(k))))
+    val labels = spark.createDataFrame(rows,
+      StructType.fromDDL("id BIGINT NOT NULL, cluster_id BIGINT NOT NULL"))
+      .select(col("id").cast(idType).as("id"), col("cluster_id").cast(idType).as("cluster_id"))
+    ids.join(broadcast(labels), Seq("id"), "left")
+      .select(col("id"), coalesce(col("cluster_id"), col("id")).as("cluster_id"))
+  }
+
+  private def iterateClusters(ids: DataFrame, induced: DataFrame): DataFrame = {
+    // barrier: every round joins the edges — computed once, not per round
+    val edges = induced
+      .unionByName(induced.select(col("dst").as("src"), col("src").as("dst")))
       .transform(materialize)
-    var labels = df.select(col(idCol).as("id"), col(idCol).as("cluster_id"))
+    // barrier: read by the first round's join AND its pointer-jump side
+    var labels = ids.select(col("id"), col("id").as("cluster_id"))
       .transform(materialize)
     var changed = 1L
     var iter = 0
@@ -790,6 +882,7 @@ object Dedup {
           least(col("cluster_id"), coalesce(col("nl"), col("cluster_id"))).as("cluster_id"),
           col("cluster_id").as("prev"))
       val ptr = stepped.select(col("id").as("jid"), col("cluster_id").as("jl"))
+      // barrier: read by the change count and the next round; caps plan depth
       val jumped = stepped
         .join(ptr, col("cluster_id") === col("jid"))
         .select(col("id"), col("jl").as("cluster_id"), col("prev"))
@@ -797,6 +890,9 @@ object Dedup {
       changed = jumped.filter(col("cluster_id") =!= col("prev")).count()
       labels = jumped.select("id", "cluster_id")
     }
+    if (changed > 0)
+      throw new IllegalStateException(
+        s"duplicateClusters did not converge in $MaxClusterIters rounds ($changed labels still changing)")
     labels
   }
 
@@ -932,7 +1028,14 @@ object Dedup {
     * representative is its min id, so the component minimum is unchanged —
     * but the pair expansion back over group members and the k² within-group
     * pairs never happen, and the CC graph shrinks by the duplication factor
-    * (the dominant cost on dup-heavy corpora). */
+    * (the dominant cost on dup-heavy corpora).
+    *
+    * Scale shape: the exact-dup groups are materialized once (the text
+    * shuffle, read by the pair build, the ids and the member expansion);
+    * the rep pair graph is then collected ONCE by [[duplicateClusters]] and
+    * labelled on the driver while it stays bounded (no per-round jobs),
+    * so the result is a lazy plan — group members ⋈ broadcast rep labels.
+    * An unbounded rep graph falls back to the distributed rounds. */
   def duplicateClustersByText(
       df: DataFrame,
       idCol: String,
@@ -959,7 +1062,11 @@ object Dedup {
   /** The user-facing dedup endpoint: the corpus with near-duplicates
     * REMOVED — one representative (the cluster's smallest id) per duplicate
     * cluster, all columns preserved. Composes [[duplicateClustersByText]]
-    * with a semi-join filter; singletons pass through untouched. */
+    * with a semi-join filter; singletons pass through untouched.
+    *
+    * Scale shape: [[duplicateClustersByText]]'s build (groups materialized,
+    * one pair-graph collect) plus one left-semi join on the id; the
+    * keep-set stays in the plan, so the audit sees its shuffles. */
   def dedupCorpus(
       df: DataFrame,
       idCol: String,

@@ -331,9 +331,10 @@ object LinkGraph {
     * with each round — the values are RANKS, not probabilities, and a
     * deep horizon on a dense graph would overflow BIGINT.
     *
-    * Scale shape (the [[Dedup.duplicateClusters]] loop conventions): the
-    * node and score tables are DOMAIN-sized (orders of magnitude below
-    * page count); each round is one edges⋈scores join + one dst-keyed
+    * Scale shape (the conventions of [[Dedup.duplicateClustersIterative]],
+    * the distributed rounds duplicate clustering falls back to above its
+    * driver bound): the node and score tables are DOMAIN-sized (orders of
+    * magnitude below page count); each round is one edges⋈scores join + one dst-keyed
     * aggregate. The edge and node tables are materialized ONCE (every
     * round joins them); the rounds themselves compose into a single
     * plan — each round's score feeds exactly one consumer (the next

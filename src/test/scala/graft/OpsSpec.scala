@@ -143,6 +143,51 @@ class OpsSpec extends SparkSpec {
     out shouldBe Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 5L, 6L -> 5L, 7L -> 7L)
   }
 
+  /** Both clustering paths: the driver union-find (what duplicateClusters
+    * picks for bounded graphs) and the distributed label propagation. */
+  private def bothClusterPaths(ids: org.apache.spark.sql.DataFrame, idCol: String,
+      pairs: org.apache.spark.sql.DataFrame): Seq[(String, Seq[(Any, Any)])] =
+    Seq(
+      "driver" -> Dedup.duplicateClusters(ids, idCol, pairs),
+      "iterative" -> Dedup.duplicateClustersIterative(ids, idCol, pairs)
+    ).map { case (path, out) => path -> out.collect().map(r => (r.get(0), r.get(1))).toSeq }
+
+  test("Dedup.duplicateClusters returns one row per distinct id when ids repeat") {
+    // a repeated id used to multiply through the pointer-jump self-join:
+    // three rows of id 1 + the pair (1, 2) returned 81 rows of id 1
+    val pairs = Seq((1L, 2L)).toDF("id_a", "id_b")
+    val tripled = Seq(1L, 1L, 1L, 2L).toDF("doc_id")
+    // a 5-row chain 1-2-3-4 with id 3 repeated
+    val chain = Seq(1L, 2L, 3L, 3L, 4L).toDF("doc_id")
+    val chainPairs = Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("id_a", "id_b")
+    for ((path, out) <- bothClusterPaths(tripled, "doc_id", pairs)) withClue(path) {
+      out.sortBy(_._1.asInstanceOf[Long]) shouldBe Seq((1L, 1L), (2L, 1L))
+    }
+    for ((path, out) <- bothClusterPaths(chain, "doc_id", chainPairs)) withClue(path) {
+      out.sortBy(_._1.asInstanceOf[Long]) shouldBe Seq((1L, 1L), (2L, 1L), (3L, 1L), (4L, 1L))
+    }
+  }
+
+  test("Dedup.duplicateClusters drops NULL ids and ignores pairs with a NULL endpoint") {
+    val ids = Seq(Some(1L), None, Some(2L), Some(3L), None).toDF("doc_id")
+    val pairs = Seq[(Option[Long], Option[Long])](
+      (Some(1L), None), (None, Some(3L)), (None, None), (Some(2L), Some(3L)))
+      .toDF("id_a", "id_b")
+    for ((path, out) <- bothClusterPaths(ids, "doc_id", pairs)) withClue(path) {
+      out.sortBy(_._1.asInstanceOf[Long]) shouldBe Seq((1L, 1L), (2L, 2L), (3L, 2L))
+    }
+  }
+
+  test("Dedup.duplicateClusters keeps an integer id column's type on both paths") {
+    val ids = Seq(5, 3, 9, 4).toDF("doc_id")
+    val pairs = Seq((5L, 3L), (9L, 5L)).toDF("id_a", "id_b")
+    for ((path, out) <- bothClusterPaths(ids, "doc_id", pairs)) withClue(path) {
+      out.sortBy(_._1.asInstanceOf[Int]) shouldBe Seq((3, 3), (4, 4), (5, 3), (9, 3))
+    }
+    Dedup.duplicateClusters(ids, "doc_id", pairs).schema.map(_.dataType) shouldBe
+      Seq(IntegerType, IntegerType)
+  }
+
   test("dedupCorpus keeps one representative per near-dup cluster") {
     val df = Seq(
       (1L, "the quick brown fox jumps over the lazy dog"),
@@ -198,7 +243,8 @@ class OpsSpec extends SparkSpec {
     spark.sparkContext.setCheckpointDir(dir.toString)
     try {
       val pairs = Seq((1L, 2L), (2L, 3L)).toDF("id_a", "id_b")
-      val out = Dedup.duplicateClusters(
+      // the distributed path is the only one that still checkpoints
+      val out = Dedup.duplicateClustersIterative(
         Seq(1L, 2L, 3L, 4L).toDF("doc_id"), "doc_id", pairs)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       out shouldBe Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L)

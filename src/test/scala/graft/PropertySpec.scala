@@ -3,6 +3,7 @@ package graft
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalacheck.Prop.propBoolean
 import org.apache.spark.sql.functions._
+import graft.ops.Dedup
 import graft.transformers._
 
 /** ScalaCheck property tests (SURVEY §5): invariants the reference's
@@ -538,6 +539,67 @@ class PropertySpec extends SparkSpec {
         .map(r => r.getLong(0) -> r.getString(1)).toMap == kept
       once && conserved && stable
     })
+  }
+
+  /** Driver-side BFS over the graph `edges` induces on `ids`: each id →
+    * the smallest id of its component — the duplicateClusters reference. */
+  private def bfsComponents(ids: Set[Long], edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val adj = edges.filter { case (a, b) => ids(a) && ids(b) }
+      .flatMap { case (a, b) => Seq(a -> b, b -> a) }
+      .groupMap(_._1)(_._2)
+    ids.iterator.map { start =>
+      val seen = scala.collection.mutable.Set(start)
+      val queue = scala.collection.mutable.Queue(start)
+      while (queue.nonEmpty)
+        adj.getOrElse(queue.dequeue(), Nil).foreach(n => if (seen.add(n)) queue.enqueue(n))
+      start -> seen.min
+    }.toMap
+  }
+
+  private def clusterRows(out: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] =
+    out.collect().map(r => r.getLong(0) -> r.getLong(1)).toSeq.sorted
+
+  /** True when the frame's plan reads a checkpoint — the iterative path's
+    * mark (the driver path keeps lineage). */
+  private def checkpointed(out: org.apache.spark.sql.DataFrame): Boolean =
+    out.queryExecution.logical.exists(_.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD])
+
+  test("property: duplicateClusters driver path == iterative path == BFS components") {
+    // ids 0..20 may be in df; 21..24 only ever appear as edge endpoints
+    val id = Gen.choose(0L, 24L)
+    val shape: Gen[List[(Long, Long)]] = Gen.oneOf(
+      Gen.listOfN(6, id).map(c => c.zip(c.drop(1))), // chain
+      Gen.zip(id, Gen.listOfN(5, id)).map { case (c, ls) => ls.map(c -> _) }, // star
+      Gen.listOfN(4, id).map(c => for (a <- c; b <- c if a < b) yield a -> b), // clique
+      id.map(x => List(x -> x))) // self-loop
+    val graphGen = for {
+      ids <- Gen.resize(30, Gen.listOf(Gen.choose(0L, 20L))) // repeats; may be empty
+      edges <- Gen.resize(6, Gen.listOf(shape)).map(_.flatten) // may be empty
+      again <- Gen.someOf(edges) // duplicated and reversed copies
+    } yield (ids, edges ++ again ++ again.map(_.swap))
+    def law(ids: List[Long], edges: List[(Long, Long)]): Boolean = {
+      val df = ids.toDF("doc_id")
+      val pairs = edges.toDF("id_a", "id_b")
+      val truth = bfsComponents(ids.toSet, edges).toSeq.sorted
+      val onDriver = Dedup.duplicateClusters(df, "doc_id", pairs)
+      !checkpointed(onDriver) && clusterRows(onDriver) == truth &&
+        clusterRows(Dedup.duplicateClustersIterative(df, "doc_id", pairs)) == truth
+    }
+    law(Nil, List(1L -> 2L)) shouldBe true // empty df
+    law(List(1L, 2L, 3L), Nil) shouldBe true // empty pairs
+    check(Prop.forAll(graphGen) { case (ids, edges) => law(ids, edges) })
+  }
+
+  test("duplicateClusters: a star one edge over the driver bound takes the iterative path") {
+    val cap = Dedup.MaxDriverClusterEdges.toLong
+    // center 0 + cap + 1 leaves (converges in 2 rounds) + 3 singletons
+    val ids = (0L to cap + 4).toDF("doc_id")
+    val pairs = (1L to cap + 1).map(0L -> _).toDF("id_a", "id_b")
+    val out = Dedup.duplicateClusters(ids, "doc_id", pairs)
+    checkpointed(out) shouldBe true
+    val labels = clusterRows(out)
+    labels shouldBe clusterRows(Dedup.duplicateClustersIterative(ids, "doc_id", pairs))
+    labels shouldBe (0L to cap + 4).map(i => i -> (if (i <= cap + 1) 0L else i))
   }
 
   test("property: politeness slots respect the delay and never precede the event") {

@@ -110,17 +110,30 @@ class QueriesSmokeSpec extends SparkSpec {
   private val expectedExchanges = Map(
     "asof_join" -> 1, "asof_join_salted" -> 4,
     "corpus_curate" -> 1, "corpus_funnel" -> 1,
-    "dedup_cluster" -> 0, "dedup_contamination" -> 4, "dedup_corpus" -> 4,
-    // +3 over dedup_corpus: the (id, score) ⋈ labels SMJ pair + the
-    // cluster-rank window — all on narrow id-tables, never document text
-    "dedup_corpus_best" -> 7,
+    // duplicateClusters labels the bounded rep graph on the driver and
+    // returns a plan, not a checkpoint: its one shuffle is the distinct
+    // over the rep ids (the labels arrive as a broadcast local table)
+    "dedup_cluster" -> 1,
+    "dedup_contamination" -> 4,
+    // the df ⋈ keep-set semi-join pair + the rep-id distinct, once per leg
+    // of the docsWithDups union the semi-join is pushed through
+    "dedup_corpus" -> 6,
+    // the (id, score) ⋈ labels SMJ pair + the cluster-rank window + the
+    // rep-id distinct — all on narrow id-tables, never document text
+    "dedup_corpus_best" -> 8,
     "dedup_key_seen" -> 0, // narrow bloom pass + broadcast anti verify
     // two drop-side hash aggs + the dictionary-sized full-outer join pair
     // + the single-partition share window — the drops never shuffle
     "corpus_drift_psi" -> 5,
-    "dedup_exact" -> 1, "dedup_incremental" -> 5, "dedup_minhash" -> 4,
+    "dedup_exact" -> 1,
+    // the incoming ⋈ hits anti-join pair, the keep-set semi-join side, and
+    // the clean-groups anti-join pair twice — under the member expansion
+    // and under the rep ids the labels come from (the rep-id distinct
+    // rides that join's partitioning)
+    "dedup_incremental" -> 7,
+    "dedup_minhash" -> 4,
     // identical body to dedup_incremental; the corpus side is parquet
-    "dedup_incremental_model" -> 5,
+    "dedup_incremental_model" -> 7,
     // one (src, dst) aggregate; link extraction + PSL joins are narrow
     "warc_link_graph" -> 1,
     "warc_anchor_text" -> 1, // narrow explode + ONE (dst, anchor) agg
@@ -208,9 +221,9 @@ class QueriesSmokeSpec extends SparkSpec {
     // the robots-parse window chain + agent selection over the
     // hosts-sized rule table; the per-host delay agg rides the end
     "text_robots_delay" -> 8,
-    // the final frame is the last round's localCheckpoint (each round
+    // the final frame is the materialized final score (each round
     // internally = one edges⋈scores join + one dst agg over DOMAIN-sized
-    // tables, truncated per round exactly like duplicateClusters)
+    // tables, all behind that one checkpoint)
     "warc_domain_centrality" -> 0,
     "dedup_ngram_jaccard" -> 3, "dedup_ngram_overlap" -> 1,
     "dedup_simhash" -> 3,
