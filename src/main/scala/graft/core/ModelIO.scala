@@ -1,7 +1,8 @@
 package graft.core
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.expr
 import org.json4s._
 import org.json4s.jackson.JsonMethods
@@ -25,6 +26,27 @@ import graft.transformers._
   *    with `expr(…)` on load — any SQL-expressible Column round-trips;
   *  - a loaded `DropHighPSIFeatures` carries its learned drop set but no
   *    reference DataFrame: `transform` works, re-`fit` does not.
+  *
+  * ModelIO also owns the DIRECTORY ARTIFACT format every table-carrying
+  * `graft.ops` model persists in (Dedup's `NearDupIndex`,
+  * `ContaminationIndex` and `KeyIndex`, Retrieval's `Bm25Index`, the
+  * LangId, LM, classifier and DSIR models; BPE's table-less `BpeModel`):
+  *  - layout: named parquet tables plus one compact JSON record
+  *    `{"version":V,…}` — `params.json`, or `bpe.json` for BPE;
+  *  - commit: the tables are written first, then the record goes to a
+  *    temp file atomically moved over the old one, so a reader (or a
+  *    crash) sees the previous record or the new one, never a torn one;
+  *  - generations: an appendable index keeps each fit/append batch's
+  *    tables under `gen-NNNNN/`, and the record's `generations` array
+  *    names the live ones — a crash mid-append leaves an orphan
+  *    generation no record names (ignored by load, reaped by compaction),
+  *    and a retried append commits exactly once;
+  *  - single writer: an append is an unlocked read-modify-write of the
+  *    record, so serialize writers; readers are unrestricted;
+  *  - save a LOADED model only to a NEW directory: its tables lazily read
+  *    the directory they were loaded from, and Spark rejects overwriting
+  *    a path that is also being read (re-fitting is the refresh path, not
+  *    load-edit-save-in-place).
   */
 object ModelIO {
 
@@ -509,5 +531,97 @@ object ModelIO {
     new Pipeline(arr(j \ "steps").map { s =>
       (str(s \ "name"), decode(s \ "conf"))
     })
+  }
+
+  // ──────────────────── ops directory artifacts ────────────────────
+
+  private val RecordFile = "params.json"
+
+  /** Saves a directory artifact: `tables` as parquet under `dir`, then
+    * the `{"version":…, fields…}` record committed as `file`. */
+  private[graft] def saveArtifact(
+      dir: String,
+      version: Int,
+      fields: Seq[(String, JValue)],
+      tables: Seq[(String, DataFrame)] = Nil,
+      file: String = RecordFile): Unit = {
+    writeTables(Paths.get(dir), tables)
+    commitRecord(Paths.get(dir), file, version, fields)
+  }
+
+  private[graft] def readRecord(dir: String, file: String = RecordFile): JValue =
+    JsonMethods.parse(Files.readString(Paths.get(dir).resolve(file)))
+
+  private[graft] def readTable(spark: SparkSession, dir: String, table: String): DataFrame =
+    spark.read.parquet(Paths.get(dir).resolve(table).toString)
+
+  private def writeTables(dir: Path, tables: Seq[(String, DataFrame)]): Unit = {
+    Files.createDirectories(dir)
+    tables.foreach { case (name, df) =>
+      df.write.mode("overwrite").parquet(dir.resolve(name).toString)
+    }
+  }
+
+  /** The COMMIT: temp file + atomic move over the previous record. */
+  private def commitRecord(
+      dir: Path, file: String, version: Int, fields: Seq[(String, JValue)]): Unit = {
+    val tmp = dir.resolve(s"$file.tmp")
+    Files.writeString(tmp, JsonMethods.compact(JsonMethods.render(
+      JObject(("version" -> JInt(version)) :: fields.toList))))
+    Files.move(tmp, dir.resolve(file),
+      StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
+  }
+
+  /** A generational artifact's committed state: its record and the live
+    * generations the record names. */
+  private[graft] final case class Generations(dir: String, record: JValue, live: Seq[String]) {
+    /** `table` across every live generation, as one relation. */
+    def table(spark: SparkSession, table: String): DataFrame =
+      spark.read.parquet(live.map(g => Paths.get(dir, g, table).toString): _*)
+  }
+
+  /** Reads the committed state of the generational artifact at `dir`
+    * (the record only — no table is touched); `kind` names the artifact
+    * in the error a record without generations raises. */
+  private[graft] def readGenerations(dir: String, kind: String): Generations = {
+    val record = readRecord(dir)
+    val live = record \ "generations" match {
+      case JArray(xs) if xs.nonEmpty => xs.collect { case JString(g) => g }
+      case _ => throw InvalidParameter(
+        s"$dir/$RecordFile names no generations — not a (healthy) $kind")
+    }
+    Generations(dir, record, live)
+  }
+
+  /** Writes `tables` as the generation after `committed` — numbered from
+    * the COMMITTED set, so orphans don't count and an uncommitted
+    * directory in the way is overwritten — then commits the record naming
+    * `committed` plus it. With `compact` the record names the new
+    * generation alone, and every other generation directory (orphans
+    * included) is deleted after the commit. */
+  private[graft] def writeGeneration(
+      dir: String,
+      committed: Seq[String],
+      version: Int,
+      fields: Seq[(String, JValue)],
+      tables: Seq[(String, DataFrame)],
+      compact: Boolean = false): Unit = {
+    val p = Paths.get(dir)
+    val gen = f"gen-${committed.map(_.stripPrefix("gen-").toInt).maxOption.fold(0)(_ + 1)}%05d"
+    writeTables(p.resolve(gen), tables)
+    val live = if (compact) Seq(gen) else committed :+ gen
+    commitRecord(p, RecordFile, version,
+      fields :+ ("generations" -> JArray(live.map(JString(_)).toList)))
+    if (compact)
+      // Files.list / Files.walk are must-close resources
+      scala.util.Using.resource(Files.list(p)) { children =>
+        children.forEach { child =>
+          val name = child.getFileName.toString
+          if (name.startsWith("gen-") && name != gen)
+            scala.util.Using.resource(Files.walk(child)) { files =>
+              files.sorted(java.util.Comparator.reverseOrder[Path]()).forEach(f => Files.delete(f))
+            }
+        }
+      }
   }
 }

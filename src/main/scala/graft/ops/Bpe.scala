@@ -2,6 +2,9 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.json4s.{JArray, JString}
+
+import graft.core.ModelIO
 
 /** Byte-pair-encoding subword tokenization (extension beyond the reference
   * surface, SURVEY §2.11) — the tokenizer-aware leg of the token-budget
@@ -94,8 +97,9 @@ object Bpe {
       "\\p{N}{1,3}| ?[^\\s\\p{L}\\p{N}]+[\\r\\n/]*|\\s*[\\r\\n]+|" +
       "\\s+(?!\\S)|\\s+"
 
-  /** A fitted BPE merge table, in rank order. Persists as a single
-    * `bpe.json` (merge tables are dictionary-sized — no parquet needed). */
+  /** A fitted BPE merge table, in rank order. Persists as a
+    * [[graft.core.ModelIO]] directory artifact holding only `bpe.json`
+    * (merge tables are dictionary-sized — no parquet needed). */
   final case class BpeModel(merges: Seq[(String, String)]) {
     merges.foreach { case (a, b) =>
       require(a.nonEmpty && b.nonEmpty && !a.contains(Sep) && !b.contains(Sep),
@@ -105,27 +109,15 @@ object Bpe {
     /** Flattened [a1, b1, a2, b2, …] — the kernel's literal argument. */
     def flat: Seq[String] = merges.flatMap { case (a, b) => Seq(a, b) }
 
-    def save(dir: String): Unit = {
-      import org.json4s._
-      import org.json4s.jackson.JsonMethods
-      val p = java.nio.file.Paths.get(dir)
-      java.nio.file.Files.createDirectories(p)
-      val json = JsonMethods.compact(JsonMethods.render(JObject(
-        "version" -> JInt(1),
-        "merges" -> JArray(merges.toList.map { case (a, b) =>
-          JArray(List(JString(a), JString(b)))
-        }))))
-      java.nio.file.Files.writeString(p.resolve("bpe.json"), json)
-    }
+    def save(dir: String): Unit =
+      ModelIO.saveArtifact(dir, 1, Seq("merges" -> JArray(merges.toList.map { case (a, b) =>
+        JArray(List(JString(a), JString(b)))
+      })), file = "bpe.json")
   }
 
   object BpeModel {
     def load(dir: String): BpeModel = {
-      import org.json4s._
-      import org.json4s.jackson.JsonMethods
-      val o = JsonMethods.parse(java.nio.file.Files.readString(
-        java.nio.file.Paths.get(dir).resolve("bpe.json")))
-      val merges = (o \ "merges") match {
+      val merges = (ModelIO.readRecord(dir, "bpe.json") \ "merges") match {
         case JArray(items) => items.map {
           case JArray(List(JString(a), JString(b))) => (a, b)
           case other => throw graft.errors.FeatureFactoryException.InvalidParameter(

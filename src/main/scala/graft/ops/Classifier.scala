@@ -2,6 +2,9 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.json4s.{JDouble, JInt}
+
+import graft.core.ModelIO
 
 /** Linear quality-classifier inference (extension beyond the reference
   * surface, SURVEY §2.11) — the third standard curation signal next to the
@@ -34,39 +37,27 @@ object Classifier {
 
   /** A fitted linear text classifier. `weights` is (gram, weight) when
     * `numBuckets == 0`, else (bucket, weight) under the hashing trick.
-    * `bias` is the class prior logit. Persists like [[Dsir.DsirModel]]
-    * (params.json + weights.parquet; save a LOADED model only to a NEW
-    * directory). */
+    * `bias` is the class prior logit. Persists as a [[graft.core.ModelIO]]
+    * directory artifact (params.json + weights.parquet). */
   final case class ClassifierModel(
       vocabSize: Int,
       numBuckets: Int,
       bias: Double,
       weights: DataFrame) {
-    def save(dir: String): Unit = {
-      import org.json4s._
-      import org.json4s.jackson.JsonMethods
-      val p = java.nio.file.Paths.get(dir)
-      java.nio.file.Files.createDirectories(p)
-      weights.write.mode("overwrite").parquet(p.resolve("weights.parquet").toString)
-      val json = JsonMethods.compact(JsonMethods.render(JObject(
-        "version" -> JInt(1),
-        "vocabSize" -> JInt(vocabSize),
-        "numBuckets" -> JInt(numBuckets),
-        "bias" -> JDouble(bias))))
-      java.nio.file.Files.writeString(p.resolve("params.json"), json)
-    }
+    def save(dir: String): Unit =
+      ModelIO.saveArtifact(dir, 1, Seq("vocabSize" -> JInt(vocabSize),
+        "numBuckets" -> JInt(numBuckets), "bias" -> JDouble(bias)),
+        Seq("weights.parquet" -> weights))
   }
 
   object ClassifierModel {
     def load(spark: SparkSession, dir: String): ClassifierModel = {
-      import org.json4s.jackson.JsonMethods
-      val p = java.nio.file.Paths.get(dir)
-      val o = JsonMethods.parse(java.nio.file.Files.readString(p.resolve("params.json")))
+      val o = ModelIO.readRecord(dir)
       ClassifierModel(
-        vocabSize = graft.core.ModelIO.dbl(o \ "vocabSize").toInt,
-        numBuckets = graft.core.ModelIO.dbl(o \ "numBuckets").toInt,
-        bias = graft.core.ModelIO.dbl(o \ "bias"),
-        weights = spark.read.parquet(p.resolve("weights.parquet").toString))
+        vocabSize = ModelIO.dbl(o \ "vocabSize").toInt,
+        numBuckets = ModelIO.dbl(o \ "numBuckets").toInt,
+        bias = ModelIO.dbl(o \ "bias"),
+        weights = ModelIO.readTable(spark, dir, "weights.parquet"))
     }
   }
 

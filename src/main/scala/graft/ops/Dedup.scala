@@ -4,6 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StructType}
+import org.json4s.{JInt, JNull, JString, JValue}
+
+import graft.core.ModelIO
 
 /** Deduplication operators for large-scale training-data pipelines.
   *
@@ -1532,15 +1535,9 @@ object Dedup {
     * band-joins the batch's signatures against the stored table (read
     * straight off parquet) and only candidate buckets expand.
     *
-    * On-disk layout is GENERATIONAL and append-only, the [[graft.ops.
-    * Retrieval.Bm25Index]] conventions exactly: `gen-NNNNN/{groups,feats}`
-    * parquet per fit/append batch, `params.json` (atomically replaced via
-    * temp-file rename) as the single commit record naming the live
-    * generations. A crash mid-append leaves an orphan generation no
-    * params.json names — ignored by load, never a torn index — and a
-    * retried append commits exactly once. SINGLE WRITER: append does an
-    * unlocked read-modify-write of params.json, so serialize writers;
-    * readers are unrestricted. */
+    * Persists as a GENERATIONAL [[graft.core.ModelIO]] directory artifact
+    * (append-only `gen-NNNNN/{groups,feats}` plus the params.json commit
+    * record naming the live generations; single writer). */
   final case class NearDupIndex(
       n: Int,
       numHashes: Int,
@@ -1548,65 +1545,25 @@ object Dedup {
       feats: DataFrame) { // (id, gs, sz, sig) per representative
 
     /** Persists as a fresh single-generation directory. */
-    def save(dir: String): Unit = {
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-      val gen = NearDupIndex.genName(0)
-      NearDupIndex.writeGeneration(this, dir, gen)
-      NearDupIndex.commitParams(dir, n, numHashes, Seq(gen))
-    }
+    def save(dir: String): Unit = NearDupIndex.commit(dir, Nil, this)
   }
 
   object NearDupIndex {
-    private[Dedup] def genName(i: Int): String = f"gen-$i%05d"
+    /** Writes `idx` as the generation after `committed` and commits. */
+    private[Dedup] def commit(dir: String, committed: Seq[String], idx: NearDupIndex): Unit =
+      ModelIO.writeGeneration(dir, committed, 1,
+        Seq("n" -> JInt(idx.n), "numHashes" -> JInt(idx.numHashes)),
+        Seq("groups" -> idx.groups, "feats" -> idx.feats))
 
-    private[Dedup] def writeGeneration(
-        idx: NearDupIndex, dir: String, gen: String): Unit = {
-      val p = java.nio.file.Paths.get(dir).resolve(gen)
-      idx.groups.write.mode("overwrite").parquet(p.resolve("groups").toString)
-      idx.feats.write.mode("overwrite").parquet(p.resolve("feats").toString)
-    }
-
-    /** The COMMIT: params.json names the live generations; temp-file +
-      * atomic move, so readers see the previous index or the new one,
-      * never a torn state. */
-    private[Dedup] def commitParams(
-        dir: String, n: Int, numHashes: Int, generations: Seq[String]): Unit = {
-      import org.json4s._
-      import org.json4s.jackson.JsonMethods
-      val p = java.nio.file.Paths.get(dir)
-      val json = JsonMethods.compact(JsonMethods.render(JObject(
-        "version" -> JInt(1),
-        "n" -> JInt(n),
-        "numHashes" -> JInt(numHashes),
-        "generations" -> JArray(generations.map(JString(_)).toList))))
-      val tmp = p.resolve("params.json.tmp")
-      java.nio.file.Files.writeString(tmp, json)
-      java.nio.file.Files.move(tmp, p.resolve("params.json"),
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    }
-
-    private[Dedup] def readParams(dir: String): (Int, Int, Seq[String]) = {
-      import org.json4s._
-      import org.json4s.jackson.JsonMethods
-      val o = JsonMethods.parse(java.nio.file.Files.readString(
-        java.nio.file.Paths.get(dir).resolve("params.json")))
-      val gens = (o \ "generations") match {
-        case JArray(xs) if xs.nonEmpty => xs.collect { case JString(s) => s }
-        case _ => throw graft.errors.FeatureFactoryException.InvalidParameter(
-          s"$dir/params.json names no generations — not a (healthy) near-dup index")
-      }
-      (graft.core.ModelIO.dbl(o \ "n").toInt,
-        graft.core.ModelIO.dbl(o \ "numHashes").toInt,
-        gens)
+    /** The committed (n, numHashes) and generations; reads no table. */
+    private[Dedup] def committed(dir: String): (Int, Int, ModelIO.Generations) = {
+      val g = ModelIO.readGenerations(dir, "near-dup index")
+      (ModelIO.dbl(g.record \ "n").toInt, ModelIO.dbl(g.record \ "numHashes").toInt, g)
     }
 
     def load(spark: SparkSession, dir: String): NearDupIndex = {
-      val (n, numHashes, gens) = readParams(dir)
-      val p = java.nio.file.Paths.get(dir)
-      NearDupIndex(n, numHashes,
-        spark.read.parquet(gens.map(g => p.resolve(g).resolve("groups").toString): _*),
-        spark.read.parquet(gens.map(g => p.resolve(g).resolve("feats").toString): _*))
+      val (n, numHashes, g) = committed(dir)
+      NearDupIndex(n, numHashes, g.table(spark, "groups"), g.table(spark, "feats"))
     }
   }
 
@@ -1666,15 +1623,12 @@ object Dedup {
   def appendToNearDupIndex(
       survivors: DataFrame, idCol: String, textCol: String, dir: String): Unit = {
     graft.core.Validators.requireColumns(survivors, Seq(idCol, textCol))
-    val (n, numHashes, gens) = NearDupIndex.readParams(dir)
+    val (n, numHashes, g) = NearDupIndex.committed(dir)
     val r = repLshFeatures(survivors, idCol, textCol, n, numHashes)
     // empty batch → true no-op (no junk generation in every future probe)
     if (r.groups.isEmpty) return
-    val maxGen = gens.map(_.stripPrefix("gen-").toInt).max
-    val gen = NearDupIndex.genName(maxGen + 1)
-    NearDupIndex.writeGeneration(
-      NearDupIndex(n, numHashes, r.groups.select("ids"), r.feats), dir, gen)
-    NearDupIndex.commitParams(dir, n, numHashes, gens :+ gen)
+    NearDupIndex.commit(dir, g.live,
+      NearDupIndex(n, numHashes, r.groups.select("ids"), r.feats))
   }
 
   /** Fitted decontamination index — the benchmark side of
@@ -1685,51 +1639,39 @@ object Dedup {
     * [[ContaminationIndex.load]]+[[contaminationApply]] at every ingest
     * point — the benchmarks are never re-tokenized per batch.
     *
-    * Persists as a DIRECTORY: `params.json` (n, bloom hashes, bloom bytes
-    * base64) plus `hashes.parquet` (the exact hash table) — the hash table
-    * is data, not metadata, so it rides the columnar format like the
-    * oracle aux dumps do, not a JSON string. Save a LOADED index only to a
-    * NEW directory: its `hashes` frame lazily reads the directory it was
-    * loaded from, and Spark rejects overwriting a path that is also being
-    * read (re-fitting is the refresh path, not load-edit-save-in-place). */
+    * Persists as a [[graft.core.ModelIO]] directory artifact: params.json
+    * (n, bloom hashes, bloom bytes base64) plus `hashes.parquet` (the
+    * exact hash table) — the hash table is data, not metadata, so it rides
+    * the columnar format like the oracle aux dumps do, not a JSON string. */
   final case class ContaminationIndex(
       n: Int,
       bloomHashes: Int,
       bloom: Option[Array[Byte]],
       hashes: DataFrame) {
-    def save(dir: String): Unit = {
-      import org.json4s._
-      import org.json4s.jackson.JsonMethods
-      val p = java.nio.file.Paths.get(dir)
-      java.nio.file.Files.createDirectories(p)
-      hashes.write.mode("overwrite").parquet(p.resolve("hashes.parquet").toString)
-      val json = JsonMethods.compact(JsonMethods.render(JObject(
-        "version" -> JInt(1),
-        "n" -> JInt(n),
-        "bloomHashes" -> JInt(bloomHashes),
-        "bloom" -> bloom.map(b =>
-          JString(java.util.Base64.getEncoder.encodeToString(b)): JValue)
-          .getOrElse(JNull))))
-      java.nio.file.Files.writeString(p.resolve("params.json"), json)
-    }
+    def save(dir: String): Unit =
+      ModelIO.saveArtifact(dir, 1, Seq("n" -> JInt(n), "bloomHashes" -> JInt(bloomHashes),
+        "bloom" -> jBloom(bloom)), Seq("hashes.parquet" -> hashes))
   }
 
   object ContaminationIndex {
     def load(spark: SparkSession, dir: String): ContaminationIndex = {
-      import org.json4s._
-      import org.json4s.jackson.JsonMethods
-      val p = java.nio.file.Paths.get(dir)
-      val o = JsonMethods.parse(java.nio.file.Files.readString(p.resolve("params.json")))
-      val bloom = (o \ "bloom") match {
-        case JString(s) => Some(java.util.Base64.getDecoder.decode(s))
-        case _ => None
-      }
+      val o = ModelIO.readRecord(dir)
       ContaminationIndex(
-        n = graft.core.ModelIO.dbl(o \ "n").toInt,
-        bloomHashes = graft.core.ModelIO.dbl(o \ "bloomHashes").toInt,
-        bloom = bloom,
-        hashes = spark.read.parquet(p.resolve("hashes.parquet").toString))
+        n = ModelIO.dbl(o \ "n").toInt,
+        bloomHashes = ModelIO.dbl(o \ "bloomHashes").toInt,
+        bloom = bloomOf(o),
+        hashes = ModelIO.readTable(spark, dir, "hashes.parquet"))
     }
+  }
+
+  /** A bloom filter's bytes in an artifact record: base64, or null when
+    * the fit ran with `useBloom = false`. */
+  private def jBloom(bloom: Option[Array[Byte]]): JValue =
+    bloom.fold[JValue](JNull)(b => JString(java.util.Base64.getEncoder.encodeToString(b)))
+
+  private def bloomOf(record: JValue): Option[Array[Byte]] = record \ "bloom" match {
+    case JString(s) => Some(java.util.Base64.getDecoder.decode(s))
+    case _ => None
   }
 
   /** Persistable seen-key index: the distinct key strings of an ingested
@@ -1741,41 +1683,25 @@ object Dedup {
     * rows again. The key table holds RAW strings, so the verify join is
     * collision-free exact and the index replays on any engine; the bloom
     * is pure pruning (false positives die in the verify join, negatives
-    * are certain by construction). */
+    * are certain by construction). Persists as a [[graft.core.ModelIO]]
+    * directory artifact: params.json (bloom hashes, bloom bytes base64)
+    * plus `keys.parquet`. */
   final case class KeyIndex(
       bloomHashes: Int,
       bloom: Option[Array[Byte]],
       keys: DataFrame) {
-    def save(dir: String): Unit = {
-      import org.json4s._
-      import org.json4s.jackson.JsonMethods
-      val p = java.nio.file.Paths.get(dir)
-      java.nio.file.Files.createDirectories(p)
-      keys.write.mode("overwrite").parquet(p.resolve("keys.parquet").toString)
-      val json = JsonMethods.compact(JsonMethods.render(JObject(
-        "version" -> JInt(1),
-        "bloomHashes" -> JInt(bloomHashes),
-        "bloom" -> bloom.map(b =>
-          JString(java.util.Base64.getEncoder.encodeToString(b)): JValue)
-          .getOrElse(JNull))))
-      java.nio.file.Files.writeString(p.resolve("params.json"), json)
-    }
+    def save(dir: String): Unit =
+      ModelIO.saveArtifact(dir, 1, Seq("bloomHashes" -> JInt(bloomHashes),
+        "bloom" -> jBloom(bloom)), Seq("keys.parquet" -> keys))
   }
 
   object KeyIndex {
     def load(spark: SparkSession, dir: String): KeyIndex = {
-      import org.json4s._
-      import org.json4s.jackson.JsonMethods
-      val p = java.nio.file.Paths.get(dir)
-      val o = JsonMethods.parse(java.nio.file.Files.readString(p.resolve("params.json")))
-      val bloom = (o \ "bloom") match {
-        case JString(s) => Some(java.util.Base64.getDecoder.decode(s))
-        case _ => None
-      }
+      val o = ModelIO.readRecord(dir)
       KeyIndex(
-        bloomHashes = graft.core.ModelIO.dbl(o \ "bloomHashes").toInt,
-        bloom = bloom,
-        keys = spark.read.parquet(p.resolve("keys.parquet").toString))
+        bloomHashes = ModelIO.dbl(o \ "bloomHashes").toInt,
+        bloom = bloomOf(o),
+        keys = ModelIO.readTable(spark, dir, "keys.parquet"))
     }
   }
 

@@ -2,6 +2,9 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.json4s.JInt
+
+import graft.core.ModelIO
 
 /** Data Selection with Importance Resampling (extension beyond the reference
   * surface, SURVEY §2.11): score raw-corpus documents by how much their
@@ -42,36 +45,21 @@ object Dsir {
     * (both models explain them equally badly — they carry no signal about
     * WHICH distribution a document resembles).
     *
-    * Persists as a directory: `params.json` (version, vocabSize) plus
-    * `weights.parquet` — the vocabulary is data, not metadata, so it rides
-    * the columnar format like [[Dedup.ContaminationIndex]]'s hash table.
-    * Save a LOADED model only to a NEW directory: its `weights` frame
-    * lazily reads the directory it was loaded from, and Spark rejects
-    * overwriting a path that is also being read (re-fitting is the refresh
-    * path, not load-edit-save-in-place). */
+    * Persists as a [[graft.core.ModelIO]] directory artifact: params.json
+    * (vocabSize) plus `weights.parquet` — the vocabulary is data, not
+    * metadata, so it rides the columnar format like
+    * [[Dedup.ContaminationIndex]]'s hash table. */
   final case class DsirModel(vocabSize: Int, weights: DataFrame) {
-    def save(dir: String): Unit = {
-      import org.json4s._
-      import org.json4s.jackson.JsonMethods
-      val p = java.nio.file.Paths.get(dir)
-      java.nio.file.Files.createDirectories(p)
-      weights.write.mode("overwrite").parquet(p.resolve("weights.parquet").toString)
-      val json = JsonMethods.compact(JsonMethods.render(JObject(
-        "version" -> JInt(1),
-        "vocabSize" -> JInt(vocabSize))))
-      java.nio.file.Files.writeString(p.resolve("params.json"), json)
-    }
+    def save(dir: String): Unit =
+      ModelIO.saveArtifact(dir, 1, Seq("vocabSize" -> JInt(vocabSize)),
+        Seq("weights.parquet" -> weights))
   }
 
   object DsirModel {
-    def load(spark: SparkSession, dir: String): DsirModel = {
-      import org.json4s.jackson.JsonMethods
-      val p = java.nio.file.Paths.get(dir)
-      val o = JsonMethods.parse(java.nio.file.Files.readString(p.resolve("params.json")))
+    def load(spark: SparkSession, dir: String): DsirModel =
       DsirModel(
-        vocabSize = graft.core.ModelIO.dbl(o \ "vocabSize").toInt,
-        weights = spark.read.parquet(p.resolve("weights.parquet").toString))
-    }
+        vocabSize = ModelIO.dbl(ModelIO.readRecord(dir) \ "vocabSize").toInt,
+        weights = ModelIO.readTable(spark, dir, "weights.parquet"))
   }
 
   /** Fit a [[DsirModel]]: vocabulary = the `vocabSize` most frequent raw

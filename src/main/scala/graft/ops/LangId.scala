@@ -2,6 +2,9 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.json4s.{JArray, JDouble, JInt, JNothing, JObject, JString}
+
+import graft.core.ModelIO
 
 /** Trained language identification (extension beyond the reference surface,
   * SURVEY §2.12) — the production successor of [[TextOps.languageId]]'s
@@ -42,28 +45,21 @@ object LangId {
     * training count still carries its smoothed penalty weight, which is
     * what lets rare evidence vote against a language. `biases` are the
     * per-language prior logits; `langs` the label set (ascending).
-    * Persists as params.json + weights.parquet ([[Dsir.DsirModel]]'s
-    * layout; save a LOADED model only to a NEW directory, same caveat). */
+    * Persists as a [[graft.core.ModelIO]] directory artifact (params.json
+    * + weights.parquet). */
   final case class LangIdModel(
       vocabSize: Int,
       langs: Seq[String],
       biases: Map[String, Double],
       weights: DataFrame,
       numBuckets: Int = 0) {
-    def save(dir: String): Unit = {
-      import org.json4s._
-      import org.json4s.jackson.JsonMethods
-      val p = java.nio.file.Paths.get(dir)
-      java.nio.file.Files.createDirectories(p)
-      weights.write.mode("overwrite").parquet(p.resolve("weights.parquet").toString)
-      val json = JsonMethods.compact(JsonMethods.render(JObject(
-        "version" -> JInt(1),
+    def save(dir: String): Unit =
+      ModelIO.saveArtifact(dir, 1, Seq(
         "vocabSize" -> JInt(vocabSize),
         "numBuckets" -> JInt(numBuckets),
         "langs" -> JArray(langs.map(JString(_)).toList),
-        "biases" -> JObject(langs.map(l => l -> JDouble(biases(l))).toList))))
-      java.nio.file.Files.writeString(p.resolve("params.json"), json)
-    }
+        "biases" -> JObject(langs.map(l => l -> JDouble(biases(l))).toList)),
+        Seq("weights.parquet" -> weights))
 
     /** The no-evidence default: the language with the highest prior logit
       * (ties by language ascending) — what a document with zero vocabulary
@@ -74,30 +70,27 @@ object LangId {
 
   object LangIdModel {
     def load(spark: SparkSession, dir: String): LangIdModel = {
-      import org.json4s._
-      import org.json4s.jackson.JsonMethods
-      val p = java.nio.file.Paths.get(dir)
-      val o = JsonMethods.parse(java.nio.file.Files.readString(p.resolve("params.json")))
+      val o = ModelIO.readRecord(dir)
       val langs = (o \ "langs") match {
         case JArray(xs) => xs.collect { case JString(s) => s }
         case _ => throw graft.errors.FeatureFactoryException.InvalidParameter(
           s"$dir/params.json carries no langs list — not a language-ID model")
       }
       val biases = (o \ "biases") match {
-        case JObject(fs) => fs.map { case (k, v) => k -> graft.core.ModelIO.dbl(v) }.toMap
+        case JObject(fs) => fs.map { case (k, v) => k -> ModelIO.dbl(v) }.toMap
         case _ => throw graft.errors.FeatureFactoryException.InvalidParameter(
           s"$dir/params.json carries no biases — not a language-ID model")
       }
       // absent in pre-hashing saves → gram-keyed (0)
       val buckets = (o \ "numBuckets") match {
-        case org.json4s.JNothing => 0
-        case j => graft.core.ModelIO.dbl(j).toInt
+        case JNothing => 0
+        case j => ModelIO.dbl(j).toInt
       }
       LangIdModel(
-        vocabSize = graft.core.ModelIO.dbl(o \ "vocabSize").toInt,
+        vocabSize = ModelIO.dbl(o \ "vocabSize").toInt,
         langs = langs,
         biases = biases,
-        weights = spark.read.parquet(p.resolve("weights.parquet").toString),
+        weights = ModelIO.readTable(spark, dir, "weights.parquet"),
         numBuckets = buckets)
     }
   }

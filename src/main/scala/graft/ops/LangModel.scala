@@ -2,6 +2,9 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.json4s.JInt
+
+import graft.core.ModelIO
 
 /** N-gram language-model scoring for corpus curation (extension beyond the
   * reference surface, SURVEY §2.11): the CCNet/Gopher-style "perplexity
@@ -53,43 +56,29 @@ object LangModel {
     * corpus (out-of-vocabulary included — the unigram denominator).
     * Out-of-vocabulary tokens score as a single count-1 floor, `ln(1/total)`.
     *
-    * Persists as a directory (`params.json` + `unigrams.parquet` +
-    * `bigrams.parquet`), with [[Dedup.ContaminationIndex]]'s caveat: save a
-    * LOADED model only to a NEW directory (its frames lazily read the
-    * directory they came from). */
+    * Persists as a [[graft.core.ModelIO]] directory artifact (params.json
+    * + `unigrams.parquet` + `bigrams.parquet`). */
   final case class LmModel(
       vocabSize: Int,
       bigramSize: Int,
       total: Long,
       unigrams: DataFrame,
       bigrams: DataFrame) {
-    def save(dir: String): Unit = {
-      import org.json4s._
-      import org.json4s.jackson.JsonMethods
-      val p = java.nio.file.Paths.get(dir)
-      java.nio.file.Files.createDirectories(p)
-      unigrams.write.mode("overwrite").parquet(p.resolve("unigrams.parquet").toString)
-      bigrams.write.mode("overwrite").parquet(p.resolve("bigrams.parquet").toString)
-      val json = JsonMethods.compact(JsonMethods.render(JObject(
-        "version" -> JInt(1),
-        "vocabSize" -> JInt(vocabSize),
-        "bigramSize" -> JInt(bigramSize),
-        "total" -> JInt(total))))
-      java.nio.file.Files.writeString(p.resolve("params.json"), json)
-    }
+    def save(dir: String): Unit =
+      ModelIO.saveArtifact(dir, 1, Seq("vocabSize" -> JInt(vocabSize),
+        "bigramSize" -> JInt(bigramSize), "total" -> JInt(total)),
+        Seq("unigrams.parquet" -> unigrams, "bigrams.parquet" -> bigrams))
   }
 
   object LmModel {
     def load(spark: SparkSession, dir: String): LmModel = {
-      import org.json4s.jackson.JsonMethods
-      val p = java.nio.file.Paths.get(dir)
-      val o = JsonMethods.parse(java.nio.file.Files.readString(p.resolve("params.json")))
+      val o = ModelIO.readRecord(dir)
       LmModel(
-        vocabSize = graft.core.ModelIO.dbl(o \ "vocabSize").toInt,
-        bigramSize = graft.core.ModelIO.dbl(o \ "bigramSize").toInt,
-        total = graft.core.ModelIO.dbl(o \ "total").toLong,
-        unigrams = spark.read.parquet(p.resolve("unigrams.parquet").toString),
-        bigrams = spark.read.parquet(p.resolve("bigrams.parquet").toString))
+        vocabSize = ModelIO.dbl(o \ "vocabSize").toInt,
+        bigramSize = ModelIO.dbl(o \ "bigramSize").toInt,
+        total = ModelIO.lng(o \ "total"), // an exact count: no Double round trip
+        unigrams = ModelIO.readTable(spark, dir, "unigrams.parquet"),
+        bigrams = ModelIO.readTable(spark, dir, "bigrams.parquet"))
     }
   }
 

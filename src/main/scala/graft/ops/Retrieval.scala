@@ -2,6 +2,9 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.json4s.{JDouble, JInt}
+
+import graft.core.ModelIO
 
 /** Lexical and hybrid retrieval over document tables (extension beyond the
   * reference surface, SURVEY §2.12) — the sparse leg of the retrieval stack
@@ -133,21 +136,14 @@ object Retrieval {
     * without ever rescanning the documents (the [[graft.sources.Writer]]
     * IVF-index economics, lexical edition).
     *
-    * On-disk layout is GENERATIONAL and append-only:
-    * `gen-NNNNN/{postings,df}` parquet per fit/append batch, with
-    * `params.json` — atomically replaced via temp-file rename — as the
-    * single commit record naming the live generations and the exact
-    * integer (n, tokens) totals. Nothing on disk is ever rewritten in
-    * place: a crash mid-append leaves an orphan generation directory that
-    * no params.json names (ignored by load, reaped by compact), never a
-    * half-updated index, and a retried append commits exactly once.
-    *
-    * SINGLE WRITER: append/compact do an unlocked read-modify-write of
-    * params.json — two concurrent appends would both read the same
-    * generation list and the last rename would win, silently dropping the
+    * Persists as a GENERATIONAL [[graft.core.ModelIO]] directory artifact:
+    * append-only `gen-NNNNN/{postings,df}` parquet per fit/append batch,
+    * and the params.json commit record naming the live generations and the
+    * exact integer (n, tokens) totals. Nothing on disk is rewritten in
+    * place. SINGLE WRITER: two concurrent appends would both read the same
+    * generation list and the last commit would win, silently dropping the
     * other batch's generation (whose orphan dir compact later reaps).
-    * Serialize all writers (the usual nightly-ingest shape); readers are
-    * unrestricted. Compaction additionally invalidates IN-FLIGHT readers:
+    * Compaction additionally invalidates IN-FLIGHT readers:
     * a [[Bm25Index]] loaded before a compact holds lazy DataFrames over
     * generation directories the compact reaps, so evaluating them
     * afterwards fails with FileNotFoundException — re-[[Bm25Index.load]]
@@ -166,88 +162,45 @@ object Retrieval {
     def avgdl: Double = avgdlOf(n, tokens)
 
     /** Persists as a fresh single-generation directory. */
-    def save(dir: String): Unit = {
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-      val gen = Bm25Index.genName(0)
-      Bm25Index.writeGeneration(this, dir, gen)
-      Bm25Index.commitParams(dir, n, tokens, k1, b, Seq(gen))
-    }
+    def save(dir: String): Unit = Bm25Index.commit(dir, Nil, this)
   }
 
   object Bm25Index {
 
-    private[Retrieval] def genName(i: Int): String = f"gen-$i%05d"
-
-    /** One generation's tables: postings term-repartitioned and SORTED by
+    /** Writes `idx`'s tables as the generation after `committed` and
+      * commits `idx`'s totals: postings term-repartitioned and SORTED by
       * term within files — a term-predicate probe prunes parquet row
       * groups by min/max statistics — plus its vocabulary-sized df. */
-    private[Retrieval] def writeGeneration(
-        idx: Bm25Index, dir: String, gen: String): Unit = {
-      val p = java.nio.file.Paths.get(dir).resolve(gen)
-      idx.postings.repartition(col("term")).sortWithinPartitions("term")
-        .write.mode("overwrite").parquet(p.resolve("postings").toString)
-      idx.dfreq.write.mode("overwrite").parquet(p.resolve("df").toString)
-    }
+    private[Retrieval] def commit(
+        dir: String, committed: Seq[String], idx: Bm25Index,
+        compact: Boolean = false): Unit =
+      ModelIO.writeGeneration(dir, committed, 2,
+        Seq("n" -> JInt(idx.n), "tokens" -> JInt(idx.tokens),
+          "k1" -> JDouble(idx.k1), "b" -> JDouble(idx.b)),
+        Seq("postings" -> idx.postings.repartition(col("term")).sortWithinPartitions("term"),
+          "df" -> idx.dfreq),
+        compact)
 
-    /** The COMMIT: params.json names the live generations; written to a
-      * temp file and atomically moved over the old record, so readers see
-      * either the previous index or the new one, never a torn state. */
-    private[Retrieval] def commitParams(
-        dir: String, n: Long, tokens: Long, k1: Double, b: Double,
-        generations: Seq[String]): Unit = {
-      import org.json4s._
-      import org.json4s.jackson.JsonMethods
-      val p = java.nio.file.Paths.get(dir)
-      val json = JsonMethods.compact(JsonMethods.render(JObject(
-        "version" -> JInt(2),
-        "n" -> JInt(BigInt(n)),
-        "tokens" -> JInt(BigInt(tokens)),
-        "k1" -> JDouble(k1),
-        "b" -> JDouble(b),
-        "generations" -> JArray(generations.map(JString(_)).toList))))
-      val tmp = p.resolve("params.json.tmp")
-      java.nio.file.Files.writeString(tmp, json)
-      java.nio.file.Files.move(tmp, p.resolve("params.json"),
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    }
-
-    private[Retrieval] def readParams(dir: String)
-        : (Long, Long, Double, Double, Seq[String]) = {
-      import org.json4s._
-      import org.json4s.jackson.JsonMethods
-      val p = java.nio.file.Paths.get(dir)
-      val o = JsonMethods.parse(java.nio.file.Files.readString(p.resolve("params.json")))
-      val gens = (o \ "generations") match {
-        case JArray(xs) if xs.nonEmpty => xs.collect { case JString(s) => s }
-        case _ => throw graft.errors.FeatureFactoryException.InvalidParameter(
-          s"$dir/params.json names no generations — not a (healthy) BM25 index")
-      }
+    /** The committed (n, tokens, k1, b) and generations; reads no table. */
+    private[Retrieval] def committed(dir: String)
+        : (Long, Long, Double, Double, ModelIO.Generations) = {
+      val g = ModelIO.readGenerations(dir, "BM25 index")
+      val r = g.record
       // lng, not dbl(...).toLong: the (n, tokens) totals are the EXACT
       // integers the avgdl bit-parity contract rests on — a Double
       // round-trip would silently lose precision above 2^53
-      (graft.core.ModelIO.lng(o \ "n"),
-        graft.core.ModelIO.lng(o \ "tokens"),
-        graft.core.ModelIO.dbl(o \ "k1"),
-        graft.core.ModelIO.dbl(o \ "b"),
-        gens)
+      (ModelIO.lng(r \ "n"), ModelIO.lng(r \ "tokens"),
+        ModelIO.dbl(r \ "k1"), ModelIO.dbl(r \ "b"), g)
     }
 
     def load(spark: org.apache.spark.sql.SparkSession, dir: String): Bm25Index = {
-      val (n, tokens, k1, b, gens) = readParams(dir)
-      val p = java.nio.file.Paths.get(dir)
-      val postings = spark.read.parquet(
-        gens.map(g => p.resolve(g).resolve("postings").toString): _*)
+      val (n, tokens, k1, b, g) = committed(dir)
       // one generation reads its df verbatim; a multi-generation index
       // merges the (disjoint-corpus) per-generation counts — a
       // vocabulary-sized aggregate that the search prunes FIRST anyway
-      val dfreq =
-        if (gens.size == 1)
-          spark.read.parquet(p.resolve(gens.head).resolve("df").toString)
-        else
-          spark.read.parquet(gens.map(g => p.resolve(g).resolve("df").toString): _*)
-            .groupBy("term").agg(sum(col("df")).as("df"))
-      Bm25Index(n, tokens, k1, b, postings, dfreq)
+      val df = g.table(spark, "df")
+      Bm25Index(n, tokens, k1, b, g.table(spark, "postings"),
+        if (g.live.size == 1) df else df.groupBy("term").agg(sum(col("df")).as("df")))
     }
   }
 
@@ -268,16 +221,13 @@ object Retrieval {
   def appendToBm25Index(
       batch: DataFrame, idCol: String, textCol: String, dir: String): Unit = {
     graft.core.Validators.requireColumns(batch, Seq(idCol, textCol))
-    val (n, tokens, k1, b, gens) = Bm25Index.readParams(dir)
+    val (n, tokens, k1, b, g) = Bm25Index.committed(dir)
     val delta = bm25Fit(batch, idCol, textCol, k1, b)
     // empty batch → true no-op: committing a junk empty generation would
     // add one parquet footer to every future probe for nothing
     if (delta.n == 0L) return
-    val maxGen = gens.map(g => g.stripPrefix("gen-").toInt).max
-    val gen = Bm25Index.genName(maxGen + 1)
-    Bm25Index.writeGeneration(delta, dir, gen)
-    Bm25Index.commitParams(dir, n + delta.n, tokens + delta.tokens, k1, b,
-      gens :+ gen)
+    // the new generation holds the batch's tables; the record, the totals
+    Bm25Index.commit(dir, g.live, delta.copy(n = n + delta.n, tokens = tokens + delta.tokens))
   }
 
   /** Builds the [[Bm25Index]]: one constants aggregate + one (id, term)
@@ -530,27 +480,10 @@ object Retrieval {
     * one" holds up to the params.json read, not for in-flight frames). */
   def compactBm25Index(
       spark: org.apache.spark.sql.SparkSession, dir: String): Unit = {
-    val (n, tokens, k1, b, gens) = Bm25Index.readParams(dir)
-    val idx = Bm25Index.load(spark, dir)
+    val (_, _, _, _, g) = Bm25Index.committed(dir)
     // merged df must MATERIALIZE under the new generation before the old
-    // ones (its inputs) are reaped — writeGeneration's write is that
-    val gen = Bm25Index.genName(
-      gens.map(_.stripPrefix("gen-").toInt).max + 1)
-    Bm25Index.writeGeneration(idx, dir, gen)
-    Bm25Index.commitParams(dir, n, tokens, k1, b, Seq(gen))
-    val p = java.nio.file.Paths.get(dir)
-    // Files.list / Files.walk are must-close resources — leak one open
-    // directory fd per stream otherwise
-    scala.util.Using.resource(java.nio.file.Files.list(p)) { children =>
-      children.forEach { child =>
-        val name = child.getFileName.toString
-        if (name.startsWith("gen-") && name != gen)
-          scala.util.Using.resource(java.nio.file.Files.walk(child)) { files =>
-            files.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-              .forEach(f => java.nio.file.Files.delete(f))
-          }
-      }
-    }
+    // ones (its inputs) are reaped — the generation write is that
+    Bm25Index.commit(dir, g.live, Bm25Index.load(spark, dir), compact = true)
   }
 
   /** BM25 with pseudo-relevance feedback (RM3's rank-only skeleton): a

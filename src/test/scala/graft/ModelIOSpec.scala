@@ -201,4 +201,158 @@ class ModelIOSpec extends SparkSpec {
       }
     }
   }
+
+  // ───────────── ops directory artifacts: the on-disk format pin ─────────────
+
+  /** Every entry of an artifact directory, sorted: top-level names plus
+    * `gen-NNNNN/<table>` for each generation directory (parquet tables
+    * are not descended into). */
+  private def layout(dir: String): Seq[String] = {
+    def names(f: java.io.File): Seq[String] = f.listFiles().map(_.getName).toSeq
+    val root = new java.io.File(dir)
+    names(root).flatMap { n =>
+      if (n.startsWith("gen-")) n +: names(new java.io.File(root, n)).map(t => s"$n/$t")
+      else Seq(n)
+    }.sorted
+  }
+
+  private def record(dir: String, file: String = "params.json"): org.json4s.JValue =
+    org.json4s.jackson.JsonMethods.parse(
+      java.nio.file.Files.readString(java.nio.file.Paths.get(dir, file)))
+
+  private def keys(j: org.json4s.JValue): Seq[String] = j match {
+    case org.json4s.JObject(fs) => fs.map(_._1)
+    case other => fail(s"not a JSON object: $other")
+  }
+
+  /** One tiny fitted instance of each of the nine ops artifact types,
+    * with its save. */
+  private def artifacts: Seq[(String, String => Unit)] = {
+    import graft.ops._
+    val s = spark
+    import s.implicits._
+    val docs = Seq((1L, "the quick brown fox jumps over the lazy dog"),
+      (2L, "a completely different document about spark"),
+      (3L, "the quick brown fox jumps over the lazy cat")).toDF("doc_id", "text")
+    val langs = Seq((1L, "aaa ab", "xx"), (2L, "bbb ba", "yy")).toDF("doc_id", "text", "lang")
+    Seq(
+      "NearDupIndex" -> Dedup.nearDupIndexFit(docs, "doc_id", "text").save _,
+      "Bm25Index" -> Retrieval.bm25Fit(docs, "doc_id", "text").save _,
+      "ContaminationIndex" -> Dedup.contaminationFit(docs, "text", n = 3).save _,
+      "KeyIndex" -> Dedup.keyIndexFit(docs, "text").save _,
+      "LangIdModel" -> LangId.langIdFit(langs, "text", "lang", vocabSize = 4).save _,
+      "LmModel" -> LangModel.lmFit(docs, "text", vocabSize = 8, bigramSize = 8).save _,
+      "ClassifierModel" -> Classifier.classifierFit(
+        docs.filter($"doc_id" =!= 2L), docs.filter($"doc_id" === 2L), "text",
+        vocabSize = 8).save _,
+      "DsirModel" -> Dsir.dsirFit(docs.limit(1), docs, "text", vocabSize = 8).save _,
+      "BpeModel" -> Bpe.bpeFit(docs, "text", numMerges = 2).save _)
+  }
+
+  test("ops artifacts keep their on-disk format: layout, record keys, version") {
+    // expected values are the format as first shipped: file names, JSON
+    // keys (in order) and versions must stay byte-compatible with every
+    // artifact already on disk
+    val expected: Map[String, (Seq[String], String, Seq[String], Int)] = Map(
+      "NearDupIndex" -> ((Seq("gen-00000", "gen-00000/feats", "gen-00000/groups",
+        "params.json"), "params.json", Seq("version", "n", "numHashes", "generations"), 1)),
+      "Bm25Index" -> ((Seq("gen-00000", "gen-00000/df", "gen-00000/postings",
+        "params.json"), "params.json",
+        Seq("version", "n", "tokens", "k1", "b", "generations"), 2)),
+      "ContaminationIndex" -> ((Seq("hashes.parquet", "params.json"), "params.json",
+        Seq("version", "n", "bloomHashes", "bloom"), 1)),
+      "KeyIndex" -> ((Seq("keys.parquet", "params.json"), "params.json",
+        Seq("version", "bloomHashes", "bloom"), 1)),
+      "LangIdModel" -> ((Seq("params.json", "weights.parquet"), "params.json",
+        Seq("version", "vocabSize", "numBuckets", "langs", "biases"), 1)),
+      "LmModel" -> ((Seq("bigrams.parquet", "params.json", "unigrams.parquet"),
+        "params.json", Seq("version", "vocabSize", "bigramSize", "total"), 1)),
+      "ClassifierModel" -> ((Seq("params.json", "weights.parquet"), "params.json",
+        Seq("version", "vocabSize", "numBuckets", "bias"), 1)),
+      "DsirModel" -> ((Seq("params.json", "weights.parquet"), "params.json",
+        Seq("version", "vocabSize"), 1)),
+      "BpeModel" -> ((Seq("bpe.json"), "bpe.json", Seq("version", "merges"), 1)))
+    val saved = artifacts
+    saved.map(_._1).toSet shouldBe expected.keySet
+    saved.foreach { case (name, save) =>
+      withClue(s"$name: ") {
+        val dir = java.nio.file.Files.createTempDirectory("graft_fmt").resolve("m").toString
+        save(dir)
+        val (files, recordFile, recordKeys, version) = expected(name)
+        layout(dir) shouldBe files
+        val r = record(dir, recordFile)
+        keys(r) shouldBe recordKeys
+        r \ "version" shouldBe org.json4s.JInt(version)
+        layout(dir).filter(_.endsWith(".tmp")) shouldBe empty
+      }
+    }
+    // the record is compact JSON: byte-exact for fully determined fields
+    val dir = java.nio.file.Files.createTempDirectory("graft_fmt_bytes")
+    graft.ops.Bpe.BpeModel(Seq("a" -> "b", "ab" -> "c")).save(dir.resolve("bpe").toString)
+    java.nio.file.Files.readString(dir.resolve("bpe/bpe.json")) shouldBe
+      """{"version":1,"merges":[["a","b"],["ab","c"]]}"""
+    val s = spark
+    import s.implicits._
+    graft.ops.Dedup.keyIndexFit(Seq("u").toDF("url"), "url", useBloom = false)
+      .save(dir.resolve("keys").toString)
+    java.nio.file.Files.readString(dir.resolve("keys/params.json")) shouldBe
+      """{"version":1,"bloomHashes":5,"bloom":null}"""
+  }
+
+  test("re-saving an ops artifact into the same directory replaces it atomically") {
+    import graft.ops._
+    val s = spark
+    import s.implicits._
+    val a = Seq((1L, "alpha beta gamma delta"), (2L, "beta gamma delta epsilon"))
+      .toDF("doc_id", "text")
+    val b = Seq((1L, "one two three"), (2L, "three four five six"), (3L, "six seven"))
+      .toDF("doc_id", "text")
+    def rows(df: org.apache.spark.sql.DataFrame): Set[String] =
+      df.collect().map(_.toString).toSet
+    def resave[M](fit: org.apache.spark.sql.DataFrame => M)(save: (M, String) => Unit)(
+        check: (M, String) => Unit): Unit = {
+      val dir = java.nio.file.Files.createTempDirectory("graft_resave").resolve("m").toString
+      save(fit(a), dir)
+      val mb = fit(b)
+      save(mb, dir)
+      check(mb, dir)
+      layout(dir).filter(_.endsWith(".tmp")) shouldBe empty
+    }
+    resave(d => Dedup.contaminationFit(d, "text", n = 2))(_.save(_)) { (m, dir) =>
+      val l = Dedup.ContaminationIndex.load(spark, dir)
+      (l.n, l.bloom.map(_.toSeq)) shouldBe ((m.n, m.bloom.map(_.toSeq)))
+      rows(l.hashes) shouldBe rows(m.hashes)
+    }
+    resave(d => Dedup.keyIndexFit(d, "text"))(_.save(_)) { (m, dir) =>
+      val l = Dedup.KeyIndex.load(spark, dir)
+      l.bloom.map(_.toSeq) shouldBe m.bloom.map(_.toSeq)
+      rows(l.keys) shouldBe rows(m.keys)
+    }
+    resave(d => LangId.langIdFit(d.withColumn("lang",
+      when($"doc_id" === 1L, "xx").otherwise("yy")), "text", "lang", vocabSize = 8))(
+      _.save(_)) { (m, dir) =>
+      val l = LangId.LangIdModel.load(spark, dir)
+      (l.langs, l.biases) shouldBe ((m.langs, m.biases))
+      rows(l.weights) shouldBe rows(m.weights)
+    }
+    resave(d => LangModel.lmFit(d, "text", vocabSize = 8, bigramSize = 8))(_.save(_)) {
+      (m, dir) =>
+        val l = LangModel.LmModel.load(spark, dir)
+        l.total shouldBe m.total
+        rows(l.unigrams) shouldBe rows(m.unigrams)
+        rows(l.bigrams) shouldBe rows(m.bigrams)
+    }
+    resave(d => Classifier.classifierFit(d.filter($"doc_id" === 1L),
+      d.filter($"doc_id" =!= 1L), "text", vocabSize = 8))(_.save(_)) { (m, dir) =>
+      val l = Classifier.ClassifierModel.load(spark, dir)
+      l.bias shouldBe m.bias
+      rows(l.weights) shouldBe rows(m.weights)
+    }
+    resave(d => Dsir.dsirFit(d.limit(1), d, "text", vocabSize = 8))(_.save(_)) { (m, dir) =>
+      rows(Dsir.DsirModel.load(spark, dir).weights) shouldBe rows(m.weights)
+    }
+    resave(d => Bpe.bpeFit(d, "text", numMerges = 2, minCount = 1L))(_.save(_)) { (m, dir) =>
+      Bpe.BpeModel.load(dir) shouldBe m
+    }
+  }
 }

@@ -2212,6 +2212,11 @@ class OpsSpec extends SparkSpec {
     val b = LangModel.lmScore(corpus, "doc_id", "text", loaded)
       .select("doc_id", "lm_score").collect().map(r => r.getLong(0) -> r.getDouble(1)).toSet
     b shouldBe a
+    // `total` is an exact count: one above 2^53 must not round through
+    // a Double on load
+    val bigDir = java.nio.file.Files.createTempDirectory("lm_rt_big").toString
+    m.copy(total = (1L << 53) + 1).save(bigDir)
+    LangModel.LmModel.load(spark, bigDir).total shouldBe (1L << 53) + 1
   }
 
   test("DsirModel save/load round trip preserves weights and scores") {

@@ -380,6 +380,89 @@ class PropertySpec extends SparkSpec {
     }
   }
 
+  // ── native kernels vs their pure-Column twins, on random text ──
+
+  /** Random documents over a small vocabulary (so tokens and n-grams
+    * repeat), mixed case and non-ASCII, joined by random whitespace runs;
+    * NULL and blank documents included. */
+  private val docGen: Gen[List[Option[String]]] = {
+    val word = Gen.oneOf("a", "b", "ab", "The", "the", "ÜBER", "über", "ça", "x1", "中文")
+    val gap = Gen.oneOf(" ", "  ", "\t", "\n", " \r\n ")
+    val doc = Gen.choose(0, 12).flatMap(n => Gen.listOfN(n, Gen.zip(gap, word)))
+      .flatMap(ws => gap.map(tail => ws.map { case (g, w) => g + w }.mkString + tail))
+    Gen.listOfN(10, Gen.frequency(8 -> doc.map(Some(_)), 1 -> Gen.const(None)))
+  }
+
+  private def docFrame(docs: List[Option[String]]) =
+    docs.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("id", "text")
+
+  test("property: token-n-gram hash kernel == Dedup.tokenNgramHashesFallback") {
+    check(Prop.forAll(Gen.zip(docGen, Gen.choose(1, 4))) { case (docs, n) =>
+      docFrame(docs).select(
+        call_function(graft.functions.TilePairs.TokenNgramName, $"text", lit(n)),
+        Dedup.tokenNgramHashesFallback($"text", n))
+        .collect().forall(r => r.getSeq[Long](0) == r.getSeq[Long](1))
+    })
+  }
+
+  test("property: hashEmbed's count kernel == Retrieval.hashEmbedFallback") {
+    check(Prop.forAll(Gen.zip(docGen, Gen.choose(1, 16), Gen.choose(-5L, 5L))) {
+      case (docs, dim, seed) =>
+        docFrame(docs).select(
+          call_function(graft.functions.TilePairs.HashEmbedName, $"text", lit(dim), lit(seed)),
+          graft.ops.Retrieval.hashEmbedFallback($"text", dim, seed))
+          .collect().forall { r =>
+            if (r.isNullAt(0)) r.isNullAt(1)
+            else !r.isNullAt(1) && r.getSeq[Double](0) == r.getSeq[Double](1)
+          }
+    })
+  }
+
+  test("property: robots verdict kernel == Robots.robotsVerdictFallback") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val path = Gen.listOfN(4, Gen.oneOf("/", "a", "b", "?", "x")).map(_.mkString)
+    // robots rules compile to anchored regexes: literal prefix, optional
+    // wildcard, optional end anchor; NULL patterns and NULL verdicts too
+    val pattern = Gen.zip(path, Gen.oneOf("", ".*", ".*b"), Gen.oneOf("", "$"))
+      .map { case (p, w, e) => "^/" + java.util.regex.Pattern.quote(p) + w + e }
+    val rule = Gen.zip(Gen.option(Gen.choose(0, 1)), Gen.frequency(6 -> pattern.map(Some(_)),
+      1 -> Gen.const(None)))
+    val rules = Gen.frequency(8 -> Gen.choose(0, 5).flatMap(Gen.listOfN(_, rule)).map(Some(_)),
+      1 -> Gen.const(None))
+    val target = Gen.frequency(8 -> path.map(p => Some("/" + p)), 1 -> Gen.const(None))
+    val schema = StructType(Seq(
+      StructField("t", StringType),
+      StructField("rules", ArrayType(StructType(Seq(
+        StructField("nl", IntegerType), StructField("kr", IntegerType),
+        StructField("pat", StringType)))))))
+    check(Prop.forAll(Gen.listOfN(12, Gen.zip(target, rules))) { rows =>
+      val df = spark.createDataFrame(
+        java.util.Arrays.asList(rows.map { case (t, rs) =>
+          Row(t.orNull, rs.map(_.map { case (kr, pat) =>
+            Row(-pat.fold(0)(_.length), kr.map(Int.box).orNull, pat.orNull)
+          }).orNull)
+        }: _*),
+        schema)
+      df.select(
+        call_function(graft.functions.TilePairs.RobotsVerdictName, $"t", $"rules"),
+        graft.ops.Robots.robotsVerdictFallback($"t", $"rules"))
+        .collect().forall(r => Option(r.get(0)) == Option(r.get(1)))
+    })
+  }
+
+  test("property: TextOps.repetitionFeatures == repetitionFeaturesFallback") {
+    import graft.ops.TextOps
+    def features(f: (org.apache.spark.sql.DataFrame, String) => org.apache.spark.sql.DataFrame,
+        df: org.apache.spark.sql.DataFrame) =
+      f(df, "text").select("id", "rep_dup_word_frac", "rep_top_word_frac",
+        "rep_top_bigram_frac").collect().map(_.toSeq).toSet
+    check(Prop.forAll(docGen) { docs =>
+      val df = docFrame(docs)
+      features(TextOps.repetitionFeatures, df) == features(TextOps.repetitionFeaturesFallback, df)
+    })
+  }
+
   test("property: keepTopFraction keeps >= the requested share, all above threshold") {
     val scoresGen = Gen.listOfN(40, Gen.choose(-50.0, 50.0))
     check(Prop.forAll(Gen.zip(scoresGen, Gen.choose(1, 9))) { case (scores, tenths) =>
